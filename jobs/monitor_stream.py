@@ -28,14 +28,16 @@ Writes to --out:
 - ``violations_stream/``  violation rows per micro-batch (stream_validate)
 - ``drift_metrics/``      one drift row per epoch (stream_drift)
 - ``drift_metrics_multi/`` one row per (column, epoch) instead, when
-  --drift-columns names several feature columns (stream_drift_multi:
-  ONE fused aggregate per micro-batch covers every column; per-column
-  rows are numerically identical to the single-column stream)
-- ``drift_metrics_multi_grouped/`` one row per (group, column, epoch)
-  when --drift-columns AND --group-keys are both given — the full
-  G x N monitoring matrix through one aggregate per micro-batch
-  (stream_drift_multi_grouped); alert cooldowns key on
-  column|group so every cell throttles independently
+  --drift-columns names several feature columns (ONE fused aggregate
+  per micro-batch covers every column; per-column rows are numerically
+  identical to the single-column stream)
+- ``drift_metrics_grouped/`` one row per (group, epoch) with
+  --group-keys, and ``drift_metrics_multi_grouped/`` one row per
+  (group, column, epoch) when --drift-columns AND --group-keys are both
+  given — the full G x N monitoring matrix through one aggregate per
+  micro-batch; alert cooldowns key on column|group so every cell
+  throttles independently.  All four are the one ``stream_drift``
+  over the profile's (group keys x columns) cells
 - ``embedding_metrics/``  one embedding-drift row per epoch, when
   --embedding-column is given (stream_embedding_drift vs a frozen
   centroid profile; the reference's detector registry runs the
@@ -116,7 +118,7 @@ def main(argv: list[str] | None = None) -> int:
         "--drift-columns", default=None,
         help="comma-separated feature columns (or SQL expressions like "
         "length(bytes)): monitor ALL of them via "
-        "ONE fused aggregate per micro-batch (stream_drift_multi) "
+        "ONE fused aggregate per micro-batch "
         "instead of the single --drift-column stream; combine with "
         "--group-keys for the full groups x columns matrix",
     )
@@ -214,11 +216,16 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from llm_drift_detector_spark.streaming import (
+        load_profile,
         reference_profile,
-        reference_profile_grouped,
+        save_profile,
         stream_drift,
-        stream_drift_grouped,
         stream_validate,
+    )
+    from llm_drift_detector_spark.streaming.drift_stream import (
+        _reference_rows,
+        _shape,
+        _sink,
     )
     from llm_drift_detector_spark.streaming.validate_stream import CLIPS_DDL
 
@@ -227,43 +234,25 @@ def main(argv: list[str] | None = None) -> int:
     transcripts = _load(spark, args.transcripts)
 
     # the frozen profile: ONE batch job over the reference window,
-    # closed over every micro-batch after that
-    group_keys = args.group_keys.split(",") if args.group_keys else None
+    # closed over every micro-batch after that.  A column list selects
+    # the fused multi-column shape, group keys the per-group one.
+    group_keys = args.group_keys.split(",") if args.group_keys else []
     drift_cols = _split_columns(args.drift_columns) if args.drift_columns else None
+    drift_spec = drift_cols or args.drift_column
     if args.profile_path and os.path.exists(args.profile_path):
-        from llm_drift_detector_spark.streaming import load_profile
-
         profile = load_profile(args.profile_path)
-        if bool(group_keys) != ("profiles" in profile) or (
-            group_keys and profile.get("keys") != group_keys
-        ):
-            raise SystemExit(
-                f"stored profile at {args.profile_path} was built with "
-                f"keys={profile.get('keys')}, run requested {group_keys}"
-            )
         # the stored profile IS the monitored contract — reject every
-        # mismatch with what this run asked for, not just the group keys
-        # (stream_drift reads profile['column']; silently monitoring a
-        # different column than the printed summary reports is worse
-        # than failing)
+        # mismatch with what this run asked for (stream_drift monitors
+        # the stored columns; silently monitoring a different column
+        # than the printed summary reports is worse than failing)
         mismatches = [
             f"{name}: stored={stored!r} requested={req!r}"
             for name, stored, req in (
+                ("group keys", profile.get("keys") or [], group_keys),
                 (
-                    ("drift columns", profile.get("columns"), drift_cols)
-                    if drift_cols
-                    else ("drift column", profile.get("column"), args.drift_column)
-                ),
-                (
-                    "kind",
-                    profile.get("kind"),
-                    (
-                        "distribution_multi_grouped"
-                        if group_keys
-                        else "distribution_multi"
-                    )
-                    if drift_cols
-                    else profile.get("kind"),
+                    "drift column",
+                    profile.get("columns", profile.get("column")),
+                    drift_spec,
                 ),
                 ("nbins", profile.get("nbins"), args.nbins),
                 ("psi_nbins", profile.get("psi_nbins"), args.psi_nbins),
@@ -277,35 +266,11 @@ def main(argv: list[str] | None = None) -> int:
                 "re-freeze, or rerun with the stored settings"
             )
     else:
-        if drift_cols and group_keys:
-            from llm_drift_detector_spark.streaming import (
-                reference_profile_multi_grouped,
-            )
-
-            profile = reference_profile_multi_grouped(
-                reference, group_keys, drift_cols,
-                nbins=args.nbins, psi_nbins=args.psi_nbins,
-            )
-        elif drift_cols:
-            from llm_drift_detector_spark.streaming import reference_profile_multi
-
-            profile = reference_profile_multi(
-                reference, drift_cols,
-                nbins=args.nbins, psi_nbins=args.psi_nbins,
-            )
-        elif group_keys:
-            profile = reference_profile_grouped(
-                reference, group_keys, args.drift_column,
-                nbins=args.nbins, psi_nbins=args.psi_nbins,
-            )
-        else:
-            profile = reference_profile(
-                reference, args.drift_column,
-                nbins=args.nbins, psi_nbins=args.psi_nbins,
-            )
+        profile = reference_profile(
+            reference, drift_spec, nbins=args.nbins,
+            psi_nbins=args.psi_nbins, keys=group_keys,
+        )
         if args.profile_path:
-            from llm_drift_detector_spark.streaming import save_profile
-
             save_profile(profile, args.profile_path)
 
     # optional third family: frozen-centroid embedding drift
@@ -332,8 +297,6 @@ def main(argv: list[str] | None = None) -> int:
         if args.embedding_profile_path and os.path.exists(
             args.embedding_profile_path
         ):
-            from llm_drift_detector_spark.streaming import load_profile
-
             emb_profile = load_profile(args.embedding_profile_path)
             emb_mismatches = [
                 f"{name}: stored={stored!r} requested={req!r}"
@@ -364,8 +327,6 @@ def main(argv: list[str] | None = None) -> int:
                     emb_ref, args.embedding_column
                 )
             if args.embedding_profile_path:
-                from llm_drift_detector_spark.streaming import save_profile
-
                 save_profile(emb_profile, args.embedding_profile_path)
 
     # optional fourth family: frozen-profile text drift (lexical +
@@ -389,8 +350,6 @@ def main(argv: list[str] | None = None) -> int:
         )
         text_schema = text_ref.schema
         if args.text_profile_path and os.path.exists(args.text_profile_path):
-            from llm_drift_detector_spark.streaming import load_profile
-
             text_profile = load_profile(args.text_profile_path)
             text_mismatches = [
                 f"{name}: stored={stored!r} requested={req!r}"
@@ -427,12 +386,10 @@ def main(argv: list[str] | None = None) -> int:
                     topic_column=args.text_topic_column,
                 )
             if args.text_profile_path:
-                from llm_drift_detector_spark.streaming import save_profile
-
                 save_profile(text_profile, args.text_profile_path)
 
     available_now = not args.continuous
-    qv = stream_validate(
+    stream_validate(
         spark,
         args.clips_dir,
         transcripts,
@@ -442,16 +399,7 @@ def main(argv: list[str] | None = None) -> int:
         available_now=available_now,
         max_files_per_trigger=args.max_files_per_trigger,
     )
-    if drift_cols:
-        from llm_drift_detector_spark.streaming import (
-            stream_drift_multi,
-            stream_drift_multi_grouped,
-        )
-
-        drift_fn = stream_drift_multi_grouped if group_keys else stream_drift_multi
-    else:
-        drift_fn = stream_drift_grouped if group_keys else stream_drift
-    qd = drift_fn(
+    stream_drift(
         spark,
         args.clips_dir,
         profile,
@@ -500,29 +448,14 @@ def main(argv: list[str] | None = None) -> int:
         spark.streams.awaitAnyTermination()
         return 0
 
+    keys, _columns, multi = _shape(profile)
     summary = {
         "run_id": args.run_id,
-        "reference_rows": (
-            sum(
-                max(p["n"] for p in cols.values())
-                for cols in profile["profiles"].values()
-            )
-            if drift_cols and group_keys
-            else max(p["n"] for p in profile["column_profiles"].values())
-            if drift_cols
-            else sum(p["n"] for p in profile["profiles"].values())
-            if group_keys
-            else profile["n"]
-        ),
-        "drift_column": drift_cols if drift_cols else args.drift_column,
+        "reference_rows": _reference_rows(profile),
+        "drift_column": drift_spec,
     }
     vio_path = os.path.join(args.out, "violations_stream")
-    met_path = os.path.join(
-        args.out,
-        ("drift_metrics_multi_grouped" if group_keys else "drift_metrics_multi")
-        if drift_cols
-        else "drift_metrics_grouped" if group_keys else "drift_metrics",
-    )
+    met_path = os.path.join(args.out, _sink(keys, multi, windowed=False)[0])
     # both sinks may legitimately not exist after a zero-batch drain
     # (no new files since the last run) — report zeros, not a traceback
     try:
@@ -536,32 +469,19 @@ def main(argv: list[str] | None = None) -> int:
     except Exception:
         rows = []
     summary["epochs"] = len({int(r.epoch) for r in rows})
-    if drift_cols and group_keys:
-        summary["drift_detected"] = [
-            {
-                **{k: r[k] for k in group_keys},
-                "column": r.column,
-                "epoch": int(r.epoch),
-            }
-            for r in rows
-            if r.drift_detected
-        ]
-    elif drift_cols:
-        summary["drift_detected"] = [
-            {"column": r.column, "epoch": int(r.epoch)}
-            for r in rows
-            if r.drift_detected
-        ]
-    elif group_keys:
-        summary["drift_detected"] = [
-            {**{k: r[k] for k in group_keys}, "epoch": int(r.epoch)}
-            for r in rows
-            if r.drift_detected
-        ]
+    flagged = [
+        {
+            **{k: r[k] for k in keys},
+            **({"column": r.column} if multi else {}),
+            "epoch": int(r.epoch),
+        }
+        for r in rows
+        if r.drift_detected
+    ]
+    if keys or multi:
+        summary["drift_detected"] = flagged
     else:
-        summary["drift_detected_epochs"] = [
-            int(r.epoch) for r in rows if r.drift_detected
-        ]
+        summary["drift_detected_epochs"] = [f["epoch"] for f in flagged]
     if emb_profile is not None:
         emb_path = os.path.join(
             args.out,

@@ -85,13 +85,10 @@ def _flags(kind: str, merged: dict) -> dict:
 
 
 def _n_total(kind: str, profile: dict) -> int:
-    if kind == "distribution_multi":
-        return max(p["n"] for p in profile["column_profiles"].values())
-    if kind == "distribution_multi_grouped":
-        return sum(
-            max(p["n"] for p in cols.values())
-            for cols in profile["profiles"].values()
-        )
+    if kind.startswith("distribution"):
+        from llm_drift_detector_spark.streaming.drift_stream import _reference_rows
+
+        return _reference_rows(profile)
     if "profiles" in profile:
         return sum(p["n"] for p in profile["profiles"].values())
     return profile["n"]
@@ -115,9 +112,6 @@ def main(argv: list[str] | None = None) -> int:
         update_embedding_reference_profile,
         update_embedding_reference_profile_grouped,
         update_reference_profile,
-        update_reference_profile_grouped,
-        update_reference_profile_multi,
-        update_reference_profile_multi_grouped,
         update_text_reference_profile,
         update_text_reference_profile_grouped,
     )
@@ -127,18 +121,14 @@ def main(argv: list[str] | None = None) -> int:
     kind = _detect_kind(profile)
     new_data = _load_df(spark, args.new_data)
 
-    rebin = {"rebin_rel_threshold": args.rebin_threshold}
+    distribution = lambda: update_reference_profile(  # noqa: E731
+        profile, new_data, rebin_rel_threshold=args.rebin_threshold
+    )
     dispatch = {
-        "distribution": lambda: update_reference_profile(profile, new_data, **rebin),
-        "distribution_grouped": lambda: update_reference_profile_grouped(
-            profile, new_data, **rebin
-        ),
-        "distribution_multi": lambda: update_reference_profile_multi(
-            profile, new_data, **rebin
-        ),
-        "distribution_multi_grouped": lambda: update_reference_profile_multi_grouped(
-            profile, new_data, **rebin
-        ),
+        "distribution": distribution,
+        "distribution_grouped": distribution,
+        "distribution_multi": distribution,
+        "distribution_multi_grouped": distribution,
         "embedding": lambda: update_embedding_reference_profile(profile, new_data),
         "embedding_grouped": lambda: update_embedding_reference_profile_grouped(
             profile, new_data

@@ -501,28 +501,40 @@ def audio_invariant_violations(
         else reference.select("clip_id", F.xxhash64("bytes").alias("rh"))
     )
     narrow = cur.select(
-        "clip_id",
+        # outer columns of the EXISTS below are named apart from the
+        # reference side's: an outer `clip_id` would resolve to the
+        # subquery's own column
+        F.col("clip_id").alias("__cid"),
         # shuffle bytes (guide §2.3): the join carries a 1-byte whitelist
         # flag instead of the codec string, and the detail JSON only for
         # the violation-rate rows that emit it (NULL otherwise — the
         # to_json also skips 99%+ of rows that way)
         F.col("codec").isin(list(CODEC_WHITELIST)).alias("__wl"),
-        F.xxhash64("bytes").alias("h"),
+        F.xxhash64("bytes").alias("__h"),
         native_viol_cond.alias("__nd"),
         F.when(native_viol_cond, native_detail).alias("__nd_detail"),
     )
-    differing_cond = (
-        F.col("rh").isNotNull()
-        & (F.col("h") != F.col("rh"))
-        & F.col("__wl")
+    # EXISTS, not a left join: the planner turns it into a broadcast
+    # existence join that emits each clips row ONCE however many
+    # reference rows share its id (a join would fan k duplicate
+    # reference ids out into k copies of the row's dur_ms_mismatch
+    # verdict).  An id differs when ANY of its reference payload hashes
+    # differs from the clip's.
+    differs = (
+        rh.select(F.col("clip_id").alias("__rid"), "rh")
+        .where(
+            (F.col("__rid") == F.col("__cid").outer())
+            & (F.col("rh") != F.col("__h").outer())
+        )
+        .exists()
     )
     marks = F.array(
         F.when(F.col("__nd"), F.struct(F.lit("dur_ms_mismatch").alias("check_name"), F.col("__nd_detail").alias("detail"))),
-        F.when(differing_cond, F.struct(F.lit(_DIFFERING).alias("check_name"), F.lit(None).cast("string").alias("detail"))),
+        F.when(F.col("__differs"), F.struct(F.lit(_DIFFERING).alias("check_name"), F.lit(None).cast("string").alias("detail"))),
     )
     fused = (
-        narrow.join(rh, "clip_id", "left")
-        .select("clip_id", F.explode(F.filter(marks, lambda x: x.isNotNull())).alias("m"))
+        narrow.select("*", (differs & F.col("__wl")).alias("__differs"))
+        .select(F.col("__cid").alias("clip_id"), F.explode(F.filter(marks, lambda x: x.isNotNull())).alias("m"))
         .select("clip_id", F.col("m.check_name").alias("check_name"), F.col("m.detail").alias("detail"))
     )
     spark = clips.sparkSession

@@ -214,18 +214,21 @@ def _violations_for_group(
              F.lit("{}"))
         )
     if rel_marks:
-        cla = clips_g.groupBy(F.col("clip_id")).agg(
-            F.count("*").alias("n_c"),
-            F.count("transcript").alias("nn_c"),
-            F.min("transcript").alias("rep_c"),
-            F.max("transcript").alias("mx_c"),
-        )
-        tra = transcripts_g.groupBy(F.col("clip_id")).agg(
-            F.count("*").alias("n_t"),
-            F.count("transcript").alias("nn_t"),
-            F.min("transcript").alias("rep_t"),
-            F.max("transcript").alias("mx_t"),
-        )
+        # the transcript profile (nn/rep/mx) only when transcript
+        # equality reads it: uniqueness/orphan-only runs must not need a
+        # `transcript` column on either side
+        def profile(side):
+            aggs = [F.count("*").alias(f"n_{side}")]
+            if cfg.check_active("transcript_equality"):
+                aggs += [
+                    F.count("transcript").alias(f"nn_{side}"),
+                    F.min("transcript").alias(f"rep_{side}"),
+                    F.max("transcript").alias(f"mx_{side}"),
+                ]
+            return aggs
+
+        cla = clips_g.groupBy(F.col("clip_id")).agg(*profile("c"))
+        tra = transcripts_g.groupBy(F.col("clip_id")).agg(*profile("t"))
         joined = cla.join(tra, "clip_id", "full_outer")
         marks = F.array(
             *[

@@ -1,37 +1,51 @@
-"""Incremental drift in the stream: each micro-batch vs a FROZEN
-reference profile.
+"""Incremental distribution drift in the stream: each micro-batch (or
+event-time window) vs a FROZEN reference profile.
 
 The reference's core loop is "current window vs reference distribution"
-on a cadence (``config/default_config.py:104-106``:
-``detection_frequency_minutes`` polls a batch window against the stored
-reference).  The streaming upgrade runs that comparison per micro-batch
-inside ``foreachBatch``:
+on a cadence (``config/default_config.py:104-106``), run once per
+provider and numerical column (``detectors/__init__.py:58-86``,
+``detectors/distribution.py``).  Streamed, that comparison is "bin each
+micro-batch against a frozen reference geometry, then do O(nbins)
+arithmetic" — one computation over CELLS:
 
-1. :func:`reference_profile` — ONE batch job over the reference window
-   precomputes everything the comparators need: n/mean/var, the value
-   range, equal-width bin counts (JS/KS), and reference-decile edges +
-   counts (PSI).  The result is a plain dict — small enough to close
-   over (an implicit broadcast to every micro-batch task).
-2. :func:`stream_drift` — per micro-batch, ONE aggregate bins the
-   batch's values against the PROFILE's fixed range/edges (counts +
-   moments in the same job), then the O(nbins) comparator arithmetic
-   (same epsilon/density/normalize sequence as ``drift/comparators``)
-   runs driver-side on the two count vectors and appends one metrics
-   row (epoch, n, js, psi, ks_d, t_stat, drift_score, drift_detected).
+- a *cell* is one (group-key tuple, column).  A global profile has zero
+  keys (the group is ``()``); a single-column profile has one column;
+  a windowed stream adds the event-time window as one more key;
+- :func:`reference_profile` freezes every cell in two jobs: a stats pass
+  (count/mean/var/range + exact decile edges, 6 expressions per column
+  in one aggregate grouped on the keys) and a binned pass;
+- :func:`update_reference_profile` folds new data into every cell in one
+  fused job, then the exact Chan moments merge + frozen-geometry bin
+  adds of :func:`_merge_cell`;
+- :func:`stream_drift` runs the binned pass per micro-batch inside ONE
+  ``foreachBatch`` (or, windowed, as a watermarked streaming aggregate
+  whose finalized windows reach ``foreachBatch``) and writes one verdict
+  row per cell with the comparators' epsilon/density sequence.
 
-Unlike the batch detector's shared-range semantics (both windows rebin
-together), the profile's range is FROZEN — the production semantics for
-a stream, where the reference must not drift with the current data.
-Batch values outside the reference range clamp into the edge bins (they
-are evidence of drift, not discardable).
+The binned pass is the same expression everywhere: each row explodes to
+one (ci, js_bin, psi_bin, v) struct per non-null monitored value, binned
+against its cell's geometry — literal floats for a global profile, a
+broadcast one-row-per-group geometry frame (built once per stream) for a
+keyed one — and one grouped aggregate counts bins and moments.  Map-side
+partial aggregation keeps the exchange at O(cells x nbins x psi_nbins).
 
-State: NONE beyond the closed-over profile — each batch's verdict is
-independent, so a planted shift in batch k flips ``drift_detected`` in
-batch k's row and nowhere else (test-asserted).
+NULL keys: rows with any NULL group key are never profiled; the stream
+and the update count them with the rows of groups that have no frozen
+profile, in the NULL-keyed ``gated_reason='unknown_group'`` row (resp.
+``unknown_rows``).  A real NULL group would collide with that marker.
+
+The profile's range is FROZEN (unlike the batch detector's shared range):
+batch values outside it clamp into the edge bins — evidence of drift,
+not discardable.  The four profile dict shapes (``{column,...}``,
+``{kind: distribution_multi, column_profiles}``, ``{column, keys,
+profiles}``, ``{kind: distribution_multi_grouped, keys, profiles}``) are
+views of the cell map (:func:`_cells` / :func:`_with_cells`); the legacy
+per-shape names are aliases or thin wrappers of the three functions.
 """
 
 from __future__ import annotations
 
+import json
 import math
 import os
 
@@ -41,10 +55,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..config import EPS, MIN_SAMPLES
 
-# read-side schema: `epoch` materializes as the partition column of
-# the sink (each micro-batch OVERWRITES its own epoch=<k> partition, so
-# a foreachBatch replay after a crash-before-checkpoint is idempotent —
-# plain appends would duplicate the replayed epoch's rows)
+# read-side schema of the global epoch sink: `epoch` materializes as the
+# partition column (each micro-batch OVERWRITES its own epoch=<k>
+# partition, so a foreachBatch replay after a crash-before-checkpoint is
+# idempotent — plain appends would duplicate the replayed epoch's rows)
 DRIFT_METRICS_SCHEMA = (
     "run_id string, epoch bigint, n bigint, batch_mean double, "
     "js double, psi double, ks_d double, t_stat double, "
@@ -56,223 +70,216 @@ _SINK_ROW_SCHEMA = (
     "drift_score double, drift_detected boolean, gated boolean"
 )
 
-
-def reference_profile(
-    ref: DataFrame,
-    column: str,
-    nbins: int = 40,
-    psi_nbins: int = 10,
-) -> dict:
-    """Precompute the frozen reference profile (edges + bin counts).
-
-    Two actions, once per stream start: a stats pass (count/mean/var/
-    range + exact decile edges) and a binned-counts pass against that
-    range.  Everything downstream is O(nbins) arithmetic.
-    """
-    v = F.col(column).cast("double")
-    base = ref.where(v.isNotNull()).select(v.alias("v"))
-    qs = [i / psi_nbins for i in range(1, psi_nbins)]
-    st = base.agg(
-        F.count("v").alias("n"),
-        F.avg("v").alias("mean"),
-        F.coalesce(F.var_samp("v"), F.lit(0.0)).alias("var"),
-        F.min("v").alias("mn"),
-        F.max("v").alias("mx"),
-        F.expr(
-            f"percentile(v, array({', '.join(f'{q}D' for q in qs)}))"
-        ).alias("edges"),
-    ).collect()[0]
-    if st.n == 0:
-        raise ValueError(f"reference window has no non-null {column} values")
-    mn, mx = float(st.mn), float(st.mx)
-    width = (mx - mn) / nbins if mx > mn else 1.0
-    edges = [float(e) for e in st.edges]
-
-    js_bin = _clamped_bin(F.col("v"), mn, width, nbins)
-    psi_bin = _psi_bucket(F.col("v"), edges)
-    counts = (
-        base.groupBy(js_bin.alias("jb"), psi_bin.alias("pb"))
-        .agg(F.count("*").alias("c"))
-        .collect()
-    )
-    js_counts = np.zeros(nbins)
-    psi_counts = np.zeros(psi_nbins)
-    for r in counts:
-        js_counts[int(r.jb)] += r.c
-        psi_counts[int(r.pb)] += r.c
-    return {
-        "column": column,
-        "n": int(st.n),
-        "mean": float(st.mean),
-        "var": float(st.var),
-        "mn": mn,
-        "mx": mx,
-        "width": width,
-        "nbins": nbins,
-        "psi_nbins": psi_nbins,
-        "edges": edges,
-        "js_counts": js_counts.tolist(),
-        "psi_counts": psi_counts.tolist(),
-    }
+_ZERO_METRICS = {
+    "js": 0.0, "psi": 0.0, "ks_d": 0.0, "t_stat": 0.0, "drift_score": 0.0,
+}
 
 
-def update_reference_profile(
-    profile: dict,
-    new_data: DataFrame,
-    rebin_rel_threshold: float = 0.25,
-) -> dict:
-    """Incrementally fold ``new_data`` into a frozen profile — without
-    touching the data the profile was built from.
-
-    The reference recomputes its distribution from scratch per update
-    (``data/processor.py:162-207``); at 10^12 rows the refresh must be
-    INCREMENTAL.  Every profile component is mergeable:
-
-    - moments: count/mean/M2 merged exactly by Chan et al.'s parallel
-      update (the same algebra Spark's own partial aggregates use);
-    - bin counts: the new rows are binned against the profile's FROZEN
-      geometry (same ``_clamped_bin`` / ``_psi_bucket`` expressions the
-      stream uses) and added — so ``merged == from-scratch over the
-      concatenated data at the same frozen edges``, exactly, for
-      count/bins (and to fp roundoff for mean/var; pytest-asserted).
-
-    The bin GEOMETRY (mn/width/edges) stays frozen — it is the drift
-    contract; silently re-deriving it would make metric history
-    incomparable across the swap.  Instead the observed data range is
-    tracked (``data_mn``/``data_mx``) and when the new data extends
-    beyond the frozen range by more than ``rebin_rel_threshold`` x
-    (mx - mn) the returned profile carries ``needs_rebin=True``: the
-    out-of-range mass is clamping into the edge bins, and the caller
-    should schedule a full re-freeze (one :func:`reference_profile`
-    pass) at the next maintenance window.  One Spark job per update
-    (the stream_drift aggregate + min/max in the same pass).
-
-    The merged dict is a drop-in :func:`stream_drift` profile — a
-    running monitor hot-swaps it by restarting with
-    ``--profile-path`` pointing at the re-saved JSON.
-    """
-    column = profile["column"]
-    nbins, psi_nbins = profile["nbins"], profile["psi_nbins"]
-    mn, width, edges = profile["mn"], profile["width"], profile["edges"]
-    v = F.col(column).cast("double")
-    base = new_data.where(v.isNotNull()).select(v.alias("v"))
-    rows = (
-        base.groupBy(
-            _clamped_bin(F.col("v"), mn, width, nbins).alias("jb"),
-            _psi_bucket(F.col("v"), edges).alias("pb"),
-        )
-        .agg(
-            F.count("*").alias("c"),
-            F.sum("v").alias("s"),
-            F.sum(F.col("v") * F.col("v")).alias("ss"),
-            F.min("v").alias("mn"),
-            F.max("v").alias("mx"),
-        )
-        .collect()
-    )
-    js_c = np.asarray(profile["js_counts"], dtype=np.float64).copy()
-    psi_c = np.asarray(profile["psi_counts"], dtype=np.float64).copy()
-    n2, s2, ss2 = 0, 0.0, 0.0
-    new_mn, new_mx = math.inf, -math.inf
-    for r in rows:
-        js_c[int(r.jb)] += r.c
-        psi_c[int(r.pb)] += r.c
-        n2 += r.c
-        s2 += r.s
-        ss2 += r.ss
-        new_mn = min(new_mn, r.mn)
-        new_mx = max(new_mx, r.mx)
-    if n2 == 0:  # nothing to fold in
-        return dict(profile)
-
-    # Chan parallel moments merge: exact in the same sense as Spark's
-    # own partial aggregation
-    n1, m1 = profile["n"], profile["mean"]
-    m2_1 = profile["var"] * (n1 - 1) if n1 > 1 else 0.0
-    mean2 = s2 / n2
-    m2_2 = ss2 - n2 * mean2 * mean2
-    n = n1 + n2
-    delta = mean2 - m1
-    mean = m1 + delta * n2 / n
-    m2 = m2_1 + m2_2 + delta * delta * n1 * n2 / n
-    var = m2 / (n - 1) if n > 1 else 0.0
-
-    data_mn = min(profile.get("data_mn", profile["mn"]), new_mn)
-    data_mx = max(profile.get("data_mx", profile["mx"]), new_mx)
-    span = max(profile["mx"] - profile["mn"], 1e-300)
-    range_excess = max(profile["mn"] - data_mn, data_mx - profile["mx"]) / span
-    return {
-        **profile,
-        "n": int(n),
-        "mean": float(mean),
-        "var": float(var),
-        "js_counts": js_c.tolist(),
-        "psi_counts": psi_c.tolist(),
-        "data_mn": float(data_mn),
-        "data_mx": float(data_mx),
-        "needs_rebin": bool(range_excess > rebin_rel_threshold),
-    }
+# ---- profile shapes <-> cell map -----------------------------------------
 
 
-def update_reference_profile_grouped(
-    profile: dict,
-    new_data: DataFrame,
-    rebin_rel_threshold: float = 0.25,
-) -> dict:
-    """Fold ``new_data`` into EVERY group of a grouped profile — one
-    fused job (broadcast geometry join + grouped bin/moment aggregate,
-    the stream's per-batch shape with min/max added), then the exact
-    per-group Chan merge :func:`update_reference_profile` applies.
+def _shape(profile: dict) -> tuple[list[str], list[str], bool]:
+    """(keys, columns, multi) of any of the four profile dict shapes."""
+    multi = "columns" in profile
+    columns = list(profile["columns"]) if multi else [profile["column"]]
+    return list(profile.get("keys") or ()), columns, multi
 
-    Rows whose group has no frozen profile are NOT folded — their
-    geometry doesn't exist, and inventing one mid-update would corrupt
-    the drift contract.  They are COUNTED and reported
-    (``unknown_rows`` on the merged dict): a persistent non-zero count
-    means a new provider appeared and the caller should schedule a full
-    re-freeze, the same decision ``needs_rebin`` signals per group.
-    Per-group results equal running the single-group update on each
-    slice (test-asserted).
-    """
-    column = profile["column"]
-    keys = profile["keys"]
-    nbins, psi_nbins = profile["nbins"], profile["psi_nbins"]
-    profiles = profile["profiles"]
-    v = F.col(column).cast("double")
-    base = new_data.where(v.isNotNull()).select(
-        *[F.col(k).cast("string").alias(k) for k in keys], v.alias("v")
-    )
-    pframe = _profiles_frame(new_data.sparkSession, keys, profiles)
-    rows = (
-        base.join(F.broadcast(pframe), keys, "left")
-        .groupBy(
-            *keys,
-            _grouped_js_bin(nbins).alias("jb"),
-            _grouped_psi_bucket().alias("pb"),
-        )
-        .agg(
-            F.count("*").alias("c"),
-            F.sum("v").alias("s"),
-            F.sum(F.col("v") * F.col("v")).alias("ss"),
-            F.min("v").alias("mn"),
-            F.max("v").alias("mx"),
-        )
-        .collect()
-    )
-    acc: dict[tuple, dict] = {}
-    unknown_rows = 0
-    for r in rows:
-        g = tuple(r[k] for k in keys)
-        if g not in profiles:
-            unknown_rows += int(r.c)
-            continue
-        a = acc.setdefault(
-            g,
-            {
-                "js": np.zeros(nbins), "psi": np.zeros(psi_nbins),
-                "n": 0, "s": 0.0, "ss": 0.0,
-                "mn": math.inf, "mx": -math.inf,
+
+def _cells(profile: dict) -> dict:
+    """``{(group tuple, column): cell profile}`` view of any profile
+    shape; global profiles use the empty group ``()``."""
+    keys, columns, multi = _shape(profile)
+    if not keys:
+        return {
+            ((), c): profile["column_profiles"][c] if multi else profile
+            for c in columns
+        }
+    if multi:
+        return {
+            (g, c): p
+            for g, cols in profile["profiles"].items()
+            for c, p in cols.items()
+        }
+    return {(g, columns[0]): p for g, p in profile["profiles"].items()}
+
+
+def _with_cells(profile: dict, cells: dict) -> dict:
+    """Inverse of :func:`_cells`: ``profile``'s header and shape holding
+    ``cells``.  Cells of every shape but the grouped single-column one
+    carry their ``column`` first."""
+    keys, columns, multi = _shape(profile)
+    if not keys and not multi:
+        return {"column": columns[0], **cells[((), columns[0])]}
+    if not keys:
+        return {
+            **profile,
+            "column_profiles": {
+                c: {"column": c, **cells[((), c)]} for c in columns
             },
+        }
+    profiles: dict = {}
+    for (g, c), p in cells.items():
+        if multi:
+            profiles.setdefault(g, {})[c] = {"column": c, **p}
+        else:
+            profiles[g] = p
+    return {**profile, "profiles": profiles}
+
+
+def _reference_rows(profile: dict) -> int:
+    """Rows a profile was frozen from (and folded into): per group, the
+    best-covered column's count."""
+    per_group: dict = {}
+    for (g, _c), p in _cells(profile).items():
+        per_group[g] = max(per_group.get(g, 0), p["n"])
+    return sum(per_group.values())
+
+
+# ---- the binned pass -----------------------------------------------------
+
+
+def _clamped_bin(v, mn, width, nbins: int):
+    """Equal-width bin against the FROZEN range; out-of-range values
+    clamp into the edge bins.  ``mn``/``width`` are floats or columns."""
+    raw = F.floor((v - F.lit(mn)) / F.lit(width))
+    return F.greatest(F.least(raw, F.lit(nbins - 1)), F.lit(0)).cast("int")
+
+
+def _psi_bucket(v, edges):
+    """Reference-decile bucket: count of edges strictly below v (the
+    comparators' PSI rule).  ``edges`` are floats or columns."""
+    b = F.lit(0)
+    for e in edges:
+        b = b + (v > F.lit(e)).cast("int")
+    return b.cast("int")
+
+
+def _values(df: DataFrame, keys: list[str], columns: list[str], *carry):
+    """Keys canonicalized to string SPARK-side (Python's str() disagrees
+    with Spark's cast for e.g. booleans) + ``v0..v{N-1}`` doubles.  A
+    column may be any SQL expression castable to double
+    (``length(bytes)``); the expression string is its cell name."""
+    return df.select(
+        *[F.col(k).cast("string").alias(k) for k in keys],
+        *carry,
+        *[F.expr(c).cast("double").alias(f"v{i}") for i, c in enumerate(columns)],
+    )
+
+
+def _any_value(columns: list[str]):
+    return F.coalesce(*[F.col(f"v{i}") for i in range(len(columns))]).isNotNull()
+
+
+def _geometry_frame(spark, keys, columns, cells) -> DataFrame:
+    """One row per profiled group carrying its per-column geometry
+    ARRAYS (indexed by column position) — the broadcast side of every
+    keyed binned pass."""
+    groups = dict.fromkeys(g for g, _ in cells)
+    rows = [
+        (
+            *g,
+            [cells[(g, c)]["mn"] for c in columns],
+            [cells[(g, c)]["width"] for c in columns],
+            [cells[(g, c)]["edges"] for c in columns],
         )
+        for g in groups
+    ]
+    ddl = ", ".join(f"{k} string" for k in keys) + (
+        ", __mns array<double>, __widths array<double>, "
+        "__edges array<array<double>>"
+    )
+    return spark.createDataFrame(rows, ddl)
+
+
+def _binned(
+    vals: DataFrame,
+    keys: list[str],
+    columns: list[str],
+    cells: dict,
+    nbins: int,
+    psi_nbins: int,
+    gframe: DataFrame | None,
+    window: str | None = None,
+) -> DataFrame:
+    """The one binned aggregate: rows of ``([w,] keys..., ci, jb, pb, c,
+    s, ss, mn, mx)`` — with a ``window`` duration, ``vals`` carries an
+    event-time ``ts`` and the aggregate groups on ``window(ts)`` too.
+    Keyed rows with no frozen geometry — an unprofiled group or a NULL
+    key, which a join never matches — collapse into one ``ci = -1``
+    marker per row with any monitored value: unknown-row counts ride the
+    same job."""
+    if keys:
+        vals = vals.join(F.broadcast(gframe), keys, "left")
+    structs = []
+    for i, c in enumerate(columns):
+        v = F.col(f"v{i}")
+        if keys:
+            mn, width = F.col("__mns")[i], F.col("__widths")[i]
+            edges = [F.col("__edges")[i][k] for k in range(psi_nbins - 1)]
+        else:
+            p = cells[((), c)]
+            mn, width, edges = p["mn"], p["width"], p["edges"]
+        structs.append(
+            F.when(
+                v.isNotNull(),
+                F.struct(
+                    F.lit(i).alias("ci"),
+                    _clamped_bin(v, mn, width, nbins).alias("jb"),
+                    _psi_bucket(v, edges).alias("pb"),
+                    v.alias("v"),
+                ),
+            )
+        )
+    arr = F.array(*structs)
+    if keys:
+        marker = F.struct(
+            F.lit(-1).alias("ci"),
+            F.lit(None).cast("int").alias("jb"),
+            F.lit(None).cast("int").alias("pb"),
+            F.lit(None).cast("double").alias("v"),
+        )
+        arr = F.when(F.col("__mns").isNotNull(), arr).otherwise(
+            F.array(F.when(_any_value(columns), marker))
+        )
+    ts = ["ts"] if window else []
+    group_by = [F.window("ts", window).alias("w")] if window else []
+    return (
+        vals.select(*keys, *ts, F.explode(arr).alias("x"))
+        .where(F.col("x").isNotNull())
+        .select(*keys, *ts, "x.*")
+        .groupBy(*group_by, *keys, "ci", "jb", "pb")
+        .agg(
+            F.count("*").alias("c"),
+            F.sum("v").alias("s"),
+            F.sum(F.col("v") * F.col("v")).alias("ss"),
+            F.min("v").alias("mn"),
+            F.max("v").alias("mx"),
+        )
+    )
+
+
+def _accumulate(rows, gkeys, nwin, columns, nbins, psi_nbins, seed=()):
+    """The one accumulator loop: binned rows -> ``{(group, column):
+    {js, psi, n, s, ss, mn, mx}}`` plus unknown-row counts keyed by the
+    window prefix (the first ``nwin`` group values)."""
+
+    def zero():
+        return {
+            "js": np.zeros(nbins), "psi": np.zeros(psi_nbins),
+            "n": 0, "s": 0.0, "ss": 0.0, "mn": math.inf, "mx": -math.inf,
+        }
+
+    acc = {cell: zero() for cell in seed}
+    unknown: dict[tuple, int] = {}
+    for r in rows:
+        g = tuple(r[k] for k in gkeys)
+        if r.ci < 0:
+            unknown[g[:nwin]] = unknown.get(g[:nwin], 0) + int(r.c)
+            continue
+        cell = (g, columns[r.ci])
+        a = acc.get(cell)
+        if a is None:
+            a = acc[cell] = zero()
         a["js"][int(r.jb)] += r.c
         a["psi"][int(r.pb)] += r.c
         a["n"] += r.c
@@ -280,32 +287,10 @@ def update_reference_profile_grouped(
         a["ss"] += r.ss
         a["mn"] = min(a["mn"], r.mn)
         a["mx"] = max(a["mx"], r.mx)
-
-    merged: dict[tuple, dict] = {}
-    for g, p in profiles.items():
-        a = acc.get(g)
-        merged[g] = (
-            dict(p)
-            if a is None or a["n"] == 0
-            else _merge_cell(p, a, rebin_rel_threshold)
-        )
-    return {**profile, "profiles": merged, "unknown_rows": int(unknown_rows)}
+    return acc, unknown
 
 
-def _clamped_bin(v, mn: float, width: float, nbins: int):
-    """Equal-width bin against the FROZEN range; out-of-range values
-    clamp into the edge bins."""
-    raw = F.floor((v - F.lit(mn)) / F.lit(width))
-    return F.greatest(F.least(raw, F.lit(nbins - 1)), F.lit(0)).cast("int")
-
-
-def _psi_bucket(v, edges: list[float]):
-    """Reference-decile bucket: count of edges strictly below v (the
-    comparators' PSI rule)."""
-    b = F.lit(0)
-    for e in edges:
-        b = b + (v > F.lit(e)).cast("int")
-    return b.cast("int")
+# ---- per-cell arithmetic -------------------------------------------------
 
 
 def _binned_metrics(
@@ -353,109 +338,6 @@ def _binned_metrics(
     }
 
 
-def stream_drift(
-    spark: SparkSession,
-    clips_dir: str,
-    profile: dict,
-    out_dir: str,
-    schema: str,
-    run_id: str = "drift-stream",
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-    min_samples: int = MIN_SAMPLES,
-    js_threshold: float = 0.1,
-    psi_threshold: float = 0.2,
-):
-    """Start a per-micro-batch drift stream vs a frozen profile.
-
-    Appends one metrics row per micro-batch to
-    ``<out_dir>/drift_metrics`` (schema: ``DRIFT_METRICS_SCHEMA``).
-    Per batch: ONE Spark aggregate (bin counts + moments in the same
-    job, grouped on (js_bin, psi_bin) — at most nbins*psi_nbins rows)
-    plus O(nbins) driver arithmetic.  Returns the streaming query.
-    """
-    column = profile["column"]
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(clips_dir)
-    sink = os.path.join(out_dir, "drift_metrics")
-    checkpoint = os.path.join(out_dir, "_drift_stream_checkpoint")
-
-    nbins, psi_nbins = profile["nbins"], profile["psi_nbins"]
-    mn, width = profile["mn"], profile["width"]
-    edges = profile["edges"]
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        v = F.col(column).cast("double")
-        base = batch_df.where(v.isNotNull()).select(v.alias("v"))
-        rows = (
-            base.groupBy(
-                _clamped_bin(F.col("v"), mn, width, nbins).alias("jb"),
-                _psi_bucket(F.col("v"), edges).alias("pb"),
-            )
-            .agg(
-                F.count("*").alias("c"),
-                F.sum("v").alias("s"),
-                F.sum(F.col("v") * F.col("v")).alias("ss"),
-            )
-            .collect()
-        )
-        js_c = np.zeros(nbins)
-        psi_c = np.zeros(psi_nbins)
-        n, s, ss = 0, 0.0, 0.0
-        for r in rows:
-            js_c[int(r.jb)] += r.c
-            psi_c[int(r.pb)] += r.c
-            n += r.c
-            s += r.s
-            ss += r.ss
-        mean = s / n if n else 0.0
-        var = (ss - n * mean * mean) / (n - 1) if n > 1 else 0.0
-        gated = n < min_samples
-        if gated:
-            m = {"js": 0.0, "psi": 0.0, "ks_d": 0.0, "t_stat": 0.0, "drift_score": 0.0}
-        else:
-            m = _binned_metrics(
-                profile, js_c, psi_c, n, mean, var, js_threshold, psi_threshold
-            )
-        out_row = [
-            (
-                run_id,
-                int(n),
-                float(mean),
-                m["js"],
-                m["psi"],
-                m["ks_d"],
-                m["t_stat"],
-                m["drift_score"],
-                bool(not gated and m["drift_score"] > 1.0),
-                bool(gated),
-            )
-        ]
-        # overwrite THIS epoch's partition: replays are idempotent
-        spark.createDataFrame(out_row, _SINK_ROW_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(f"{sink}/epoch={int(epoch_id)}")
-
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
-
-
-MULTI_SINK_ROW_SCHEMA = "column string, " + _SINK_ROW_SCHEMA
-
-_ZERO_METRICS = {
-    "js": 0.0, "psi": 0.0, "ks_d": 0.0, "t_stat": 0.0, "drift_score": 0.0,
-}
-
-
 def _cell_verdict(
     profile_cell: dict,
     a: dict,
@@ -463,11 +345,7 @@ def _cell_verdict(
     js_threshold: float,
     psi_threshold: float,
 ) -> tuple:
-    """(n, mean, metrics, gated) from one cell accumulator
-    {js, psi, n, s, ss} — the shared verdict assembly of every
-    variant's foreachBatch (one definition so a contract change cannot
-    silently diverge between the grouped/multi/matrix/windowed
-    copies)."""
+    """(n, mean, metrics, gated) from one cell accumulator."""
     n = a["n"]
     mean = a["s"] / n if n else 0.0
     var = (a["ss"] - n * mean * mean) / (n - 1) if n > 1 else 0.0
@@ -482,877 +360,14 @@ def _cell_verdict(
     return n, mean, m, gated
 
 
-def reference_profile_multi(
-    ref: DataFrame,
-    columns: list[str],
-    nbins: int = 40,
-    psi_nbins: int = 10,
-) -> dict:
-    """Frozen reference profiles for MANY feature columns at once.
-
-    A production monitor watches every feature of the clip row
-    (dur_ms, sr_hz, decoded stats, ...), not one — the reference's
-    detector loop iterates ``numerical_columns``
-    (``detectors/distribution.py``: one detector instance per column).
-    Running N single-column streams would scan every micro-batch N
-    times; this builder and :func:`stream_drift_multi` fuse all
-    columns into the same two jobs the single-column path uses:
-
-    1. ONE stats pass — every column's count/mean/var/range/decile
-       edges as 6N expressions in a single aggregate (no shuffle
-       beyond the global agg).
-    2. ONE binned-counts pass — each row emits an array of
-       (column_idx, js_bin, psi_bin) structs (nulls filtered
-       array-side), exploded and counted.  Map-side partial
-       aggregation collapses the explode to at most
-       ``ncols x nbins x psi_nbins`` rows per task before the
-       shuffle, so the exchange stays tiny at any row count.
-
-    Per-column dicts are exactly :func:`reference_profile`'s shape, so
-    all downstream arithmetic (``_binned_metrics``,
-    :func:`update_reference_profile`) applies unchanged per column.
-    Stored under ``column_profiles`` (string keys — JSON round-trips
-    through save/load_profile untouched).
-
-    Each entry of ``columns`` may be a plain column name OR any SQL
-    expression castable to double (``length(bytes)``,
-    ``length(transcript)``) — payload/metadata features monitor
-    without a decode pass; the expression string is the column key in
-    profiles, sink rows, and alert cooldowns.
-    """
-    if not columns:
-        raise ValueError("columns must be non-empty")
-    qs = [i / psi_nbins for i in range(1, psi_nbins)]
-    base = ref.select(
-        *[F.expr(c).cast("double").alias(f"v{i}") for i, c in enumerate(columns)]
-    )
-    exprs = []
-    for i in range(len(columns)):
-        v = f"v{i}"
-        exprs += [
-            F.count(v).alias(f"n{i}"),
-            F.avg(v).alias(f"mean{i}"),
-            F.coalesce(F.var_samp(v), F.lit(0.0)).alias(f"var{i}"),
-            F.min(v).alias(f"mn{i}"),
-            F.max(v).alias(f"mx{i}"),
-            F.expr(
-                f"percentile({v}, array({', '.join(f'{q}D' for q in qs)}))"
-            ).alias(f"edges{i}"),
-        ]
-    st = base.agg(*exprs).collect()[0]
-    profiles: dict[str, dict] = {}
-    for i, c in enumerate(columns):
-        if not st[f"n{i}"]:
-            raise ValueError(f"reference window has no non-null {c} values")
-        mn, mx = float(st[f"mn{i}"]), float(st[f"mx{i}"])
-        width = (mx - mn) / nbins if mx > mn else 1.0
-        profiles[c] = {
-            "column": c,
-            "n": int(st[f"n{i}"]),
-            "mean": float(st[f"mean{i}"]),
-            "var": float(st[f"var{i}"]),
-            "mn": mn,
-            "mx": mx,
-            "width": width,
-            "nbins": nbins,
-            "psi_nbins": psi_nbins,
-            "edges": [float(e) for e in st[f"edges{i}"]],
-            "js_counts": np.zeros(nbins),
-            "psi_counts": np.zeros(psi_nbins),
-        }
-
-    for r in _multi_binned_rows(base, columns, profiles, with_moments=False):
-        p = profiles[columns[int(r.ci)]]
-        p["js_counts"][int(r.jb)] += r.c
-        p["psi_counts"][int(r.pb)] += r.c
-    for p in profiles.values():
-        p["js_counts"] = p["js_counts"].tolist()
-        p["psi_counts"] = p["psi_counts"].tolist()
-    return {
-        "kind": "distribution_multi",
-        "columns": list(columns),
-        "nbins": nbins,
-        "psi_nbins": psi_nbins,
-        "column_profiles": profiles,
-    }
-
-
-def _multi_binned_rows(
-    base,
-    columns: list[str],
-    profiles: dict,
-    with_moments: bool,
-    with_range: bool = False,
-):
-    """One fused job: rows of (ci, jb, pb, c[, s, ss][, mn, mx]) for
-    every column.  ``base`` must carry ``v0..v{N-1}`` double columns."""
-    structs = []
-    for i, c in enumerate(columns):
-        p = profiles[c]
-        v = F.col(f"v{i}")
-        structs.append(
-            F.when(
-                v.isNotNull(),
-                F.struct(
-                    F.lit(i).alias("ci"),
-                    _clamped_bin(v, p["mn"], p["width"], p["nbins"]).alias("jb"),
-                    _psi_bucket(v, p["edges"]).alias("pb"),
-                    v.alias("v"),
-                ),
-            )
-        )
-    exploded = base.select(
-        F.explode(
-            F.filter(F.array(*structs), lambda x: x.isNotNull())
-        ).alias("x")
-    ).select("x.ci", "x.jb", "x.pb", "x.v")
-    aggs = [F.count("*").alias("c")]
-    if with_moments:
-        aggs += [
-            F.sum("v").alias("s"),
-            F.sum(F.col("v") * F.col("v")).alias("ss"),
-        ]
-    if with_range:
-        aggs += [F.min("v").alias("mn"), F.max("v").alias("mx")]
-    return exploded.groupBy("ci", "jb", "pb").agg(*aggs).collect()
-
-
-def update_reference_profile_multi(
-    profile: dict,
-    new_data: DataFrame,
-    rebin_rel_threshold: float = 0.25,
-) -> dict:
-    """Fold ``new_data`` into every column of a multi profile — ONE
-    fused job for all columns (the :func:`_multi_binned_rows` pass with
-    moments + range), then the same exact Chan moments merge + frozen-
-    geometry bin adds :func:`update_reference_profile` applies per
-    column.  Per-column results are identical to running the
-    single-column update N times (test-asserted); each column tracks
-    its own ``data_mn/data_mx/needs_rebin``.
-    """
-    columns = profile["columns"]
-    profiles = profile["column_profiles"]
-    base = new_data.select(
-        *[F.expr(c).cast("double").alias(f"v{i}") for i, c in enumerate(columns)]
-    )
-    acc = {
-        c: {
-            "js": np.zeros(profiles[c]["nbins"]),
-            "psi": np.zeros(profiles[c]["psi_nbins"]),
-            "n": 0, "s": 0.0, "ss": 0.0,
-            "mn": math.inf, "mx": -math.inf,
-        }
-        for c in columns
-    }
-    for r in _multi_binned_rows(
-        base, columns, profiles, with_moments=True, with_range=True
-    ):
-        a = acc[columns[int(r.ci)]]
-        a["js"][int(r.jb)] += r.c
-        a["psi"][int(r.pb)] += r.c
-        a["n"] += r.c
-        a["s"] += r.s
-        a["ss"] += r.ss
-        a["mn"] = min(a["mn"], r.mn)
-        a["mx"] = max(a["mx"], r.mx)
-
-    merged: dict[str, dict] = {
-        c: (
-            dict(profiles[c])
-            if acc[c]["n"] == 0
-            else _merge_cell(profiles[c], acc[c], rebin_rel_threshold)
-        )
-        for c in columns
-    }
-    return {**profile, "column_profiles": merged}
-
-
-def stream_drift_multi(
-    spark: SparkSession,
-    clips_dir: str,
-    profile: dict,
-    out_dir: str,
-    schema: str,
-    run_id: str = "drift-stream",
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-    min_samples: int = MIN_SAMPLES,
-    js_threshold: float = 0.1,
-    psi_threshold: float = 0.2,
-):
-    """Per-micro-batch drift for MANY columns vs their frozen profiles
-    — ONE fused aggregate per batch regardless of column count.
-
-    Appends one row per (column, epoch) to
-    ``<out_dir>/drift_metrics_multi`` (``MULTI_SINK_ROW_SCHEMA`` +
-    epoch partition).  Per-column rows are numerically IDENTICAL to
-    running :func:`stream_drift` on that column alone (same
-    ``_binned_metrics`` arithmetic on the same counts; test-asserted):
-    fusing changes the execution shape, not the numbers.  A column
-    with no non-null values in a batch still gets its (gated, n=0)
-    row, so every epoch reports every monitored column.  Epoch
-    partitions are overwritten — replays stay idempotent.
-    """
-    columns = profile["columns"]
-    profiles = profile["column_profiles"]
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(clips_dir)
-    sink = os.path.join(out_dir, "drift_metrics_multi")
-    checkpoint = os.path.join(out_dir, "_drift_stream_multi_checkpoint")
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        base = batch_df.select(
-            *[
-                F.expr(c).cast("double").alias(f"v{i}")
-                for i, c in enumerate(columns)
-            ]
-        )
-        per_col: dict[str, dict] = {
-            c: {
-                "js": np.zeros(profiles[c]["nbins"]),
-                "psi": np.zeros(profiles[c]["psi_nbins"]),
-                "n": 0,
-                "s": 0.0,
-                "ss": 0.0,
-            }
-            for c in columns
-        }
-        for r in _multi_binned_rows(base, columns, profiles, with_moments=True):
-            a = per_col[columns[int(r.ci)]]
-            a["js"][int(r.jb)] += r.c
-            a["psi"][int(r.pb)] += r.c
-            a["n"] += r.c
-            a["s"] += r.s
-            a["ss"] += r.ss
-        out_rows = []
-        for c in columns:
-            n, mean, m, gated = _cell_verdict(
-                profiles[c], per_col[c], min_samples,
-                js_threshold, psi_threshold,
-            )
-            out_rows.append(
-                (
-                    c, run_id, int(n), float(mean),
-                    m["js"], m["psi"], m["ks_d"], m["t_stat"],
-                    m["drift_score"],
-                    bool(not gated and m["drift_score"] > 1.0),
-                    bool(gated),
-                )
-            )
-        spark.createDataFrame(out_rows, MULTI_SINK_ROW_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(f"{sink}/epoch={int(epoch_id)}")
-
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
-
-
-WINDOWED_SINK_ROW_SCHEMA = (
-    "window_start timestamp, window_end timestamp, " + _SINK_ROW_SCHEMA
-)
-
-
-def stream_drift_windowed(
-    spark: SparkSession,
-    clips_dir: str,
-    profile: dict,
-    out_dir: str,
-    schema: str,
-    ts_col: str,
-    window_duration: str = "1 hour",
-    watermark_delay: str = "2 hours",
-    run_id: str = "drift-stream",
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-    min_samples: int = MIN_SAMPLES,
-    js_threshold: float = 0.1,
-    psi_threshold: float = 0.2,
-):
-    """EVENT-TIME windowed drift vs a frozen profile — the
-    late-data-tolerant variant of :func:`stream_drift`.
-
-    The epoch streams score each MICRO-BATCH (arrival time); when rows
-    arrive out of order, a late row lands in the wrong epoch's verdict.
-    Here the binning expressions run against the frozen geometry as
-    before, but the counts aggregate under ``window(ts_col)`` with a
-    WATERMARK: Spark's state store holds each event-time window open
-    for ``watermark_delay`` past its end, merges late rows into their
-    proper window, and only then emits the window's cells (append
-    mode).  ``foreachBatch`` therefore receives FINALIZED windows only
-    — one O(nbins) driver computation per completed window, one sink
-    row per window at ``<out>/drift_metrics_windowed`` partitioned by
-    the window start (overwritten per window: replays stay idempotent).
-    Rows later than the watermark are dropped by Spark — the documented
-    trade of bounded state for bounded lateness.
-
-    AvailableNow caveat (inherent to watermark semantics, surfaces in
-    any engine): a window finalizes only when the watermark passes its
-    end, and the watermark only advances on ARRIVING data — the
-    newest window(s) of a drained backlog stay in the state store and
-    emit on the NEXT run once newer data arrives.  A monitoring
-    pipeline that needs the final partial window immediately should
-    read the epoch stream alongside.
-    """
-    column = profile["column"]
-    nbins, psi_nbins = profile["nbins"], profile["psi_nbins"]
-    mn, width = profile["mn"], profile["width"]
-    edges = profile["edges"]
-    sink = os.path.join(out_dir, "drift_metrics_windowed")
-    checkpoint = os.path.join(out_dir, "_drift_stream_windowed_checkpoint")
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    v = F.col(column).cast("double")
-    cells = (
-        reader.parquet(clips_dir)
-        .where(v.isNotNull() & F.col(ts_col).isNotNull())
-        .select(F.col(ts_col).alias("ts"), v.alias("v"))
-        .withWatermark("ts", watermark_delay)
-        .groupBy(
-            F.window("ts", window_duration).alias("w"),
-            _clamped_bin(F.col("v"), mn, width, nbins).alias("jb"),
-            _psi_bucket(F.col("v"), edges).alias("pb"),
-        )
-        .agg(
-            F.count("*").alias("c"),
-            F.sum("v").alias("s"),
-            F.sum(F.col("v") * F.col("v")).alias("ss"),
-        )
-    )
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        # finalized (window, jb, pb) cells only; window bounds collect
-        # as epoch-second LONGS — naive driver datetimes are ambiguous
-        # across a DST fall-back (two UTC windows could render equal
-        # and silently merge)
-        rows = batch_df.select(
-            F.col("w.start").cast("long").alias("ws"),
-            F.col("w.end").cast("long").alias("we"),
-            "jb", "pb", "c", "s", "ss",
-        ).collect()
-        by_w: dict = {}
-        for r in rows:
-            a = by_w.setdefault(
-                (int(r.ws), int(r.we)),
-                {
-                    "js": np.zeros(nbins), "psi": np.zeros(psi_nbins),
-                    "n": 0, "s": 0.0, "ss": 0.0,
-                },
-            )
-            a["js"][int(r.jb)] += r.c
-            a["psi"][int(r.pb)] += r.c
-            a["n"] += r.c
-            a["s"] += r.s
-            a["ss"] += r.ss
-        out_rows = []
-        for (ws, we), a in sorted(by_w.items()):
-            n, mean, m, gated = _cell_verdict(
-                profile, a, min_samples, js_threshold, psi_threshold
-            )
-            out_rows.append(
-                (
-                    ws, we, run_id, int(n), float(mean),
-                    m["js"], m["psi"], m["ks_d"], m["t_stat"],
-                    m["drift_score"],
-                    bool(not gated and m["drift_score"] > 1.0),
-                    bool(gated),
-                )
-            )
-        if not out_rows:
-            return
-        # ONE write for all finalized windows of the batch: dynamic
-        # partition overwrite replaces exactly the written windows'
-        # partitions (a crash-replay rewrites identical content), with
-        # one job instead of one per window
-        (
-            spark.createDataFrame(
-                out_rows, "ws bigint, we bigint, " + _SINK_ROW_SCHEMA
-            )
-            .select(
-                F.timestamp_seconds("ws").alias("window_start"),
-                F.timestamp_seconds("we").alias("window_end"),
-                "run_id", "n", "batch_mean", "js", "psi", "ks_d",
-                "t_stat", "drift_score", "drift_detected", "gated",
-                F.col("ws").alias("w"),
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("w")
-            .parquet(sink)
-        )
-
-    writer = (
-        cells.writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
-
-
-def reference_profile_grouped(
-    ref: DataFrame,
-    keys: list[str],
-    column: str,
-    nbins: int = 40,
-    psi_nbins: int = 10,
-) -> dict:
-    """Frozen PER-GROUP reference profiles (the reference's per-provider
-    loop, ``detectors/__init__.py:58-86``, frozen at stream start).
-
-    Two grouped jobs, once per stream: a per-group stats pass (count/
-    moments/range + exact decile edges) and a binned-counts pass joining
-    each row to its group's broadcast range.  Result is a plain dict of
-    per-group profiles — O(#groups x nbins) driver memory; for very
-    large group counts use the batch `grouped_distribution_drift_binned`
-    on a cadence instead.
-    """
-    v = F.col(column).cast("double")
-    # keys canonicalize to string SPARK-side, matching the per-batch
-    # select in stream_drift_grouped — Python str() disagrees with
-    # Spark's cast for e.g. booleans ('True' vs 'true'), which would
-    # misroute every row of that group to the unknown bucket
-    base = ref.where(v.isNotNull()).select(
-        *[F.col(k).cast("string").alias(k) for k in keys], v.alias("v")
-    )
-    qs = [i / psi_nbins for i in range(1, psi_nbins)]
-    st = base.groupBy(*keys).agg(
-        F.count("v").alias("n"),
-        F.avg("v").alias("mean"),
-        F.coalesce(F.var_samp("v"), F.lit(0.0)).alias("var"),
-        F.min("v").alias("mn"),
-        F.max("v").alias("mx"),
-        F.expr(
-            f"percentile(v, array({', '.join(f'{q}D' for q in qs)}))"
-        ).alias("edges"),
-    ).collect()
-    if not st:
-        raise ValueError(f"reference window has no non-null {column} values")
-    profiles: dict[tuple, dict] = {}
-    for r in st:
-        mn, mx = float(r.mn), float(r.mx)
-        width = (mx - mn) / nbins if mx > mn else 1.0
-        profiles[tuple(r[k] for k in keys)] = {
-            "n": int(r.n),
-            "mean": float(r.mean),
-            "var": float(r.var),
-            "mn": mn,
-            "mx": mx,
-            "width": width,
-            "nbins": nbins,
-            "psi_nbins": psi_nbins,
-            "edges": [float(e) for e in r.edges],
-            "js_counts": np.zeros(nbins),
-            "psi_counts": np.zeros(psi_nbins),
-        }
-    spark = ref.sparkSession
-    pframe = _profiles_frame(spark, keys, profiles)
-    counts = (
-        base.join(F.broadcast(pframe), keys)
-        .groupBy(
-            *keys,
-            _grouped_js_bin(nbins).alias("jb"),
-            _grouped_psi_bucket().alias("pb"),
-        )
-        .agg(F.count("*").alias("c"))
-        .collect()
-    )
-    for r in counts:
-        g = profiles[tuple(r[k] for k in keys)]
-        g["js_counts"][int(r.jb)] += r.c
-        g["psi_counts"][int(r.pb)] += r.c
-    for g in profiles.values():
-        g["js_counts"] = g["js_counts"].tolist()
-        g["psi_counts"] = g["psi_counts"].tolist()
-    return {
-        "column": column,
-        "keys": list(keys),
-        "nbins": nbins,
-        "psi_nbins": psi_nbins,
-        "profiles": profiles,
-    }
-
-
-def _profiles_frame(spark, keys: list[str], profiles: dict) -> DataFrame:
-    """Tiny (one row per group) frame carrying each group's frozen
-    range/edges, for broadcast-joining batches against."""
-    rows = [
-        (*g, p["mn"], p["width"], p["edges"]) for g, p in profiles.items()
-    ]
-    ddl = ", ".join(f"{k} string" for k in keys) + (
-        ", __mn double, __width double, __edges array<double>"
-    )
-    return spark.createDataFrame(rows, ddl)
-
-
-def _grouped_js_bin(nbins: int):
-    raw = F.floor((F.col("v") - F.col("__mn")) / F.col("__width"))
-    return F.greatest(F.least(raw, F.lit(nbins - 1)), F.lit(0)).cast("int")
-
-
-def _grouped_psi_bucket():
-    return F.aggregate(
-        F.col("__edges"),
-        F.lit(0),
-        lambda acc, e: acc + (F.col("v") > e).cast("int"),
-    ).cast("int")
-
-
-def stream_drift_grouped(
-    spark: SparkSession,
-    clips_dir: str,
-    profile: dict,
-    out_dir: str,
-    schema: str,
-    run_id: str = "drift-stream",
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-    min_samples: int = MIN_SAMPLES,
-    js_threshold: float = 0.1,
-    psi_threshold: float = 0.2,
-):
-    """Per-GROUP per-micro-batch drift vs frozen per-group profiles.
-
-    `profile` comes from :func:`reference_profile_grouped`.  Appends one
-    metrics row per (group, epoch) to ``<out_dir>/drift_metrics``
-    (group key columns string-cast + the ``DRIFT_METRICS_SCHEMA``
-    metric columns + ``gated_reason``).  Per batch: ONE Spark
-    aggregate — every group's bin counts and moments ride the same
-    broadcast-join + groupBy job, never a job per group — then
-    O(#groups x nbins) driver arithmetic.
-
-    Batch rows whose group has no reference profile are counted and
-    reported as a NULL-keyed row with ``gated_reason='unknown_group'``
-    (NOT a reserved key literal, which could collide with a real group
-    value) rather than silently skipped; gated known groups carry
-    ``gated_reason='min_samples'``.  An empty/all-null batch still
-    writes its epoch partition (one NULL-keyed ``empty_batch`` row) so
-    epoch accounting matches the global variant.
-    """
-    column = profile["column"]
-    keys = profile["keys"]
-    nbins, psi_nbins = profile["nbins"], profile["psi_nbins"]
-    profiles = profile["profiles"]
-    # distinct sink + checkpoint from the global variant: sharing one
-    # out_dir between modes must not reuse the wrong stream checkpoint
-    # or mix incompatible row schemas in one dataset
-    sink = os.path.join(out_dir, "drift_metrics_grouped")
-    checkpoint = os.path.join(out_dir, "_drift_stream_grouped_checkpoint")
-    out_schema = ", ".join(f"{k} string" for k in keys) + (
-        ", run_id string, n bigint, batch_mean double, "
-        "js double, psi double, ks_d double, t_stat double, "
-        "drift_score double, drift_detected boolean, gated boolean, "
-        "gated_reason string"
-    )
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(clips_dir)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        v = F.col(column).cast("double")
-        base = batch_df.where(v.isNotNull()).select(
-            *[F.col(k).cast("string").alias(k) for k in keys], v.alias("v")
-        )
-        pframe = _profiles_frame(spark, keys, profiles)
-        joined = base.join(F.broadcast(pframe), keys, "left")
-        # rows whose group has no profile keep NULL __mn -> NULL bins;
-        # they ride the SAME aggregate (null grouping keys are legal)
-        # and the driver routes them to the unknown_group row — one job
-        # per batch, no separate count pass
-        rows = (
-            joined.groupBy(
-                *keys,
-                _grouped_js_bin(nbins).alias("jb"),
-                _grouped_psi_bucket().alias("pb"),
-            )
-            .agg(
-                F.count("*").alias("c"),
-                F.sum("v").alias("s"),
-                F.sum(F.col("v") * F.col("v")).alias("ss"),
-            )
-            .collect()
-        )
-        acc: dict[tuple, dict] = {}
-        n_unknown = 0
-        for r in rows:
-            g = tuple(r[k] for k in keys)
-            if g not in profiles:
-                n_unknown += r.c
-                continue
-            a = acc.setdefault(
-                g,
-                {"js": np.zeros(nbins), "psi": np.zeros(psi_nbins), "n": 0, "s": 0.0, "ss": 0.0},
-            )
-            a["js"][int(r.jb)] += r.c
-            a["psi"][int(r.pb)] += r.c
-            a["n"] += r.c
-            a["s"] += r.s
-            a["ss"] += r.ss
-        out_rows = []
-        for g, a in sorted(acc.items()):
-            n, mean, m, gated = _cell_verdict(
-                profiles[g], a, min_samples, js_threshold, psi_threshold
-            )
-            out_rows.append(
-                (
-                    *g,
-                    run_id,
-                    int(n),
-                    float(mean),
-                    m["js"],
-                    m["psi"],
-                    m["ks_d"],
-                    m["t_stat"],
-                    m["drift_score"],
-                    bool(not gated and m["drift_score"] > 1.0),
-                    bool(gated),
-                    "min_samples" if gated else None,
-                )
-            )
-        if n_unknown:
-            # NULL keys + marker column: a real group VALUE named
-            # 'unknown_group' stays unambiguous
-            out_rows.append(
-                (
-                    *([None] * len(keys)),
-                    run_id, int(n_unknown), 0.0,
-                    0.0, 0.0, 0.0, 0.0, 0.0, False, True, "unknown_group",
-                )
-            )
-        if not out_rows:
-            # empty/all-null batch: still claim this epoch's partition
-            # (matches the global variant's per-epoch accounting)
-            out_rows.append(
-                (
-                    *([None] * len(keys)),
-                    run_id, 0, 0.0,
-                    0.0, 0.0, 0.0, 0.0, 0.0, False, True, "empty_batch",
-                )
-            )
-        # overwrite THIS epoch's partition: replays are idempotent
-        spark.createDataFrame(out_rows, out_schema).write.mode(
-            "overwrite"
-        ).parquet(f"{sink}/epoch={int(epoch_id)}")
-
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
-
-
-def reference_profile_multi_grouped(
-    ref: DataFrame,
-    keys: list[str],
-    columns: list[str],
-    nbins: int = 40,
-    psi_nbins: int = 10,
-) -> dict:
-    """Frozen per-(group, column) profiles — the full monitoring
-    matrix: the reference's loop is per-provider AND per-numerical-
-    column; :func:`stream_drift_multi_grouped` runs G groups x N
-    columns through ONE aggregate per micro-batch.
-
-    Two grouped jobs once per stream (the single-column grouped
-    builder's shape, widened): a per-group stats pass with 6N
-    expressions, and a binned-counts pass where each row joins its
-    group's broadcast per-column geometry arrays and emits
-    (column_idx, js_bin, psi_bin) structs.  ``columns`` entries may be
-    SQL expressions (:func:`reference_profile_multi`'s contract).
-
-    Every (group, column) cell must have at least one non-null value —
-    a silent empty cell would make that pair unmonitorable while the
-    summary claims coverage, so the builder raises listing offenders.
-    Driver memory is O(#groups x #columns x nbins).
-    """
-    if not columns:
-        raise ValueError("columns must be non-empty")
-    qs = [i / psi_nbins for i in range(1, psi_nbins)]
-    base = ref.select(
-        *[F.col(k).cast("string").alias(k) for k in keys],
-        *[F.expr(c).cast("double").alias(f"v{i}") for i, c in enumerate(columns)],
-    )
-    exprs = []
-    for i in range(len(columns)):
-        v = f"v{i}"
-        exprs += [
-            F.count(v).alias(f"n{i}"),
-            F.avg(v).alias(f"mean{i}"),
-            F.coalesce(F.var_samp(v), F.lit(0.0)).alias(f"var{i}"),
-            F.min(v).alias(f"mn{i}"),
-            F.max(v).alias(f"mx{i}"),
-            F.expr(
-                f"percentile({v}, array({', '.join(f'{q}D' for q in qs)}))"
-            ).alias(f"edges{i}"),
-        ]
-    st = base.groupBy(*keys).agg(*exprs).collect()
-    if not st:
-        raise ValueError("reference window is empty")
-    empty_cells = [
-        (tuple(r[k] for k in keys), c)
-        for r in st
-        for i, c in enumerate(columns)
-        if not r[f"n{i}"]
-    ]
-    if empty_cells:
-        raise ValueError(
-            "reference window has no non-null values for "
-            f"{[(list(g), c) for g, c in empty_cells]}"
-        )
-    profiles: dict[tuple, dict] = {}
-    for r in st:
-        g = tuple(r[k] for k in keys)
-        profiles[g] = {}
-        for i, c in enumerate(columns):
-            mn, mx = float(r[f"mn{i}"]), float(r[f"mx{i}"])
-            width = (mx - mn) / nbins if mx > mn else 1.0
-            profiles[g][c] = {
-                "column": c,
-                "n": int(r[f"n{i}"]),
-                "mean": float(r[f"mean{i}"]),
-                "var": float(r[f"var{i}"]),
-                "mn": mn,
-                "mx": mx,
-                "width": width,
-                "nbins": nbins,
-                "psi_nbins": psi_nbins,
-                "edges": [float(e) for e in r[f"edges{i}"]],
-                "js_counts": np.zeros(nbins),
-                "psi_counts": np.zeros(psi_nbins),
-            }
-    spark = ref.sparkSession
-    gframe = _multi_geometry_frame(spark, keys, columns, profiles)
-    for r in _multi_grouped_binned_rows(
-        base.join(F.broadcast(gframe), keys),
-        keys, columns, nbins, with_moments=False,
-    ):
-        if int(r.ci) < 0:
-            continue
-        p = profiles[tuple(r[k] for k in keys)][columns[int(r.ci)]]
-        p["js_counts"][int(r.jb)] += r.c
-        p["psi_counts"][int(r.pb)] += r.c
-    for g in profiles.values():
-        for p in g.values():
-            p["js_counts"] = p["js_counts"].tolist()
-            p["psi_counts"] = p["psi_counts"].tolist()
-    return {
-        "kind": "distribution_multi_grouped",
-        "columns": list(columns),
-        "keys": list(keys),
-        "nbins": nbins,
-        "psi_nbins": psi_nbins,
-        "profiles": profiles,
-    }
-
-
-def _multi_geometry_frame(
-    spark, keys: list[str], columns: list[str], profiles: dict
-) -> DataFrame:
-    """One row per group carrying per-column geometry ARRAYS (indexed
-    by column position), for broadcast-joining batches against."""
-    rows = [
-        (
-            *g,
-            [cols[c]["mn"] for c in columns],
-            [cols[c]["width"] for c in columns],
-            [cols[c]["edges"] for c in columns],
-        )
-        for g, cols in profiles.items()
-    ]
-    ddl = ", ".join(f"{k} string" for k in keys) + (
-        ", __mns array<double>, __widths array<double>, "
-        "__edges array<array<double>>"
-    )
-    return spark.createDataFrame(rows, ddl)
-
-
-def _multi_grouped_binned_rows(
-    joined: DataFrame,
-    keys: list[str],
-    columns: list[str],
-    nbins: int,
-    with_moments: bool,
-    with_range: bool = False,
-):
-    """ONE fused job over a geometry-joined frame: rows of
-    (keys..., ci, jb, pb, c[, s, ss]).  Rows whose group has no frozen
-    geometry (NULL ``__mns`` after a left join) collapse into a single
-    ``ci = -1`` marker struct per row — unknown-ROW counts ride the
-    same aggregate, no second pass."""
-    structs = []
-    for i in range(len(columns)):
-        v = F.col(f"v{i}")
-        raw = F.floor((v - F.col("__mns")[i]) / F.col("__widths")[i])
-        jb = F.greatest(F.least(raw, F.lit(nbins - 1)), F.lit(0)).cast("int")
-        pb = F.aggregate(
-            F.col("__edges")[i],
-            F.lit(0),
-            lambda acc, e: acc + (v > e).cast("int"),
-        ).cast("int")
-        structs.append(
-            F.when(
-                v.isNotNull(),
-                F.struct(
-                    F.lit(i).alias("ci"), jb.alias("jb"),
-                    pb.alias("pb"), v.alias("v"),
-                ),
-            )
-        )
-    unknown_marker = F.struct(
-        F.lit(-1).alias("ci"),
-        F.lit(None).cast("int").alias("jb"),
-        F.lit(None).cast("int").alias("pb"),
-        F.lit(None).cast("double").alias("v"),
-    )
-    any_value = F.coalesce(*[F.col(f"v{i}") for i in range(len(columns))])
-    arr = F.when(
-        F.col("__mns").isNotNull(),
-        F.filter(F.array(*structs), lambda x: x.isNotNull()),
-    ).otherwise(
-        F.when(any_value.isNotNull(), F.array(unknown_marker)).otherwise(
-            F.array().cast(
-                "array<struct<ci:int,jb:int,pb:int,v:double>>"
-            )
-        )
-    )
-    exploded = joined.select(*keys, F.explode(arr).alias("x")).select(
-        *keys, "x.ci", "x.jb", "x.pb", "x.v"
-    )
-    aggs = [F.count("*").alias("c")]
-    if with_moments:
-        aggs += [
-            F.sum("v").alias("s"),
-            F.sum(F.col("v") * F.col("v")).alias("ss"),
-        ]
-    if with_range:
-        aggs += [F.min("v").alias("mn"), F.max("v").alias("mx")]
-    return exploded.groupBy(*keys, "ci", "jb", "pb").agg(*aggs).collect()
-
-
 def _merge_cell(p: dict, a: dict, rebin_rel_threshold: float) -> dict:
     """Exact Chan moments merge + frozen-geometry bin adds for ONE
-    profile cell, from an accumulator {n, s, ss, mn, mx, js, psi} —
-    the shared arithmetic of every incremental distribution update."""
+    profile cell, from an accumulator {n, s, ss, mn, mx, js, psi} (the
+    same algebra Spark's own partial aggregates use).  The geometry
+    stays frozen — it is the drift contract — so the observed range is
+    tracked (``data_mn``/``data_mx``) and ``needs_rebin`` raised once it
+    escapes the frozen range by more than ``rebin_rel_threshold`` x
+    (mx - mn): a full re-freeze is then due."""
     n2 = a["n"]
     n1, m1 = p["n"], p["mean"]
     m2_1 = p["var"] * (n1 - 1) if n1 > 1 else 0.0
@@ -1384,65 +399,179 @@ def _merge_cell(p: dict, a: dict, rebin_rel_threshold: float) -> dict:
     }
 
 
-def update_reference_profile_multi_grouped(
+# ---- the three operations --------------------------------------------------
+
+
+def reference_profile(
+    ref: DataFrame,
+    column: str | list[str],
+    nbins: int = 40,
+    psi_nbins: int = 10,
+    keys: list[str] | tuple = (),
+) -> dict:
+    """Freeze the reference profile of every (group, column) cell.
+
+    ``column`` is one column (a str) or a list of them (the multi-column
+    shapes); ``keys`` groups the profile per key tuple (the reference's
+    per-provider loop).  Two jobs: a stats pass (count/mean/var/range +
+    exact decile edges, 6 expressions per column, grouped on the keys)
+    and the binned pass against that geometry.  The result is a plain
+    dict in one of the four shapes the module docstring lists — small
+    enough to close over every micro-batch; driver memory is
+    O(#groups x #columns x nbins).
+
+    A group is profiled when it has a non-NULL key and at least one
+    non-null monitored value; every column of a profiled group must
+    have values — a silent empty cell would make that pair
+    unmonitorable while the summary claims coverage, so the builder
+    raises listing offenders.
+    """
+    multi = not isinstance(column, str)
+    columns = list(column) if multi else [column]
+    keys = list(keys)
+    if not columns:
+        raise ValueError("columns must be non-empty")
+    qs = [i / psi_nbins for i in range(1, psi_nbins)]
+    keyed = F.lit(True)
+    for k in keys:
+        keyed = keyed & F.col(k).isNotNull()
+    base = _values(ref, keys, columns).where(keyed & _any_value(columns))
+    exprs = []
+    for i in range(len(columns)):
+        v = f"v{i}"
+        exprs += [
+            F.count(v).alias(f"n{i}"),
+            F.avg(v).alias(f"mean{i}"),
+            F.coalesce(F.var_samp(v), F.lit(0.0)).alias(f"var{i}"),
+            F.min(v).alias(f"mn{i}"),
+            F.max(v).alias(f"mx{i}"),
+            F.expr(
+                f"percentile({v}, array({', '.join(f'{q}D' for q in qs)}))"
+            ).alias(f"edges{i}"),
+        ]
+    st = base.groupBy(*keys).agg(*exprs).collect()
+    empty = [
+        (list(r[k] for k in keys), c) if keys else c
+        for r in st
+        for i, c in enumerate(columns)
+        if not r[f"n{i}"]
+    ]
+    if not st or empty:
+        raise ValueError(
+            f"reference window has no non-null values for {empty or columns}"
+        )
+    cells: dict = {}
+    for r in st:
+        g = tuple(r[k] for k in keys)
+        for i, c in enumerate(columns):
+            mn, mx = float(r[f"mn{i}"]), float(r[f"mx{i}"])
+            cells[(g, c)] = {
+                "n": int(r[f"n{i}"]),
+                "mean": float(r[f"mean{i}"]),
+                "var": float(r[f"var{i}"]),
+                "mn": mn,
+                "mx": mx,
+                "width": (mx - mn) / nbins if mx > mn else 1.0,
+                "nbins": nbins,
+                "psi_nbins": psi_nbins,
+                "edges": [float(e) for e in r[f"edges{i}"]],
+            }
+    gframe = (
+        _geometry_frame(ref.sparkSession, keys, columns, cells) if keys else None
+    )
+    acc, _ = _accumulate(
+        _binned(base, keys, columns, cells, nbins, psi_nbins, gframe).collect(),
+        keys, 0, columns, nbins, psi_nbins,
+    )
+    for cell, p in cells.items():
+        p["js_counts"] = acc[cell]["js"].tolist()
+        p["psi_counts"] = acc[cell]["psi"].tolist()
+
+    header: dict = (
+        {
+            "kind": "distribution_multi" + "_grouped" * bool(keys),
+            "columns": columns,
+        }
+        if multi
+        else {"column": column}
+    )
+    if keys:
+        header["keys"] = keys
+    header.update(nbins=nbins, psi_nbins=psi_nbins)
+    return _with_cells(header, cells)
+
+
+def update_reference_profile(
     profile: dict,
     new_data: DataFrame,
     rebin_rel_threshold: float = 0.25,
 ) -> dict:
-    """Fold ``new_data`` into every (group, column) cell of a matrix
-    profile — ONE fused job (the matrix stream's per-batch aggregate
-    with range extras), then the exact per-cell Chan merge.  Unknown
-    groups are counted and reported (``unknown_rows``), never folded —
-    same contract as :func:`update_reference_profile_grouped`.
+    """Incrementally fold ``new_data`` into every cell of a frozen
+    profile — without touching the data the profile was built from.
+
+    The reference recomputes its distribution from scratch per update
+    (``data/processor.py:162-207``); at 10^12 rows the refresh must be
+    INCREMENTAL.  One fused job bins the new rows against the FROZEN
+    geometry (the stream's binned pass, with min/max), then
+    :func:`_merge_cell` merges each cell exactly: merged == from-scratch
+    over the concatenated data at the same frozen edges, exactly for
+    count/bins and to fp roundoff for mean/var.  A cell with no new
+    values is returned untouched.
+
+    Keyed profiles: rows of groups with no frozen profile (and rows with
+    a NULL key) are NOT folded — their geometry doesn't exist, and
+    inventing one mid-update would corrupt the drift contract.  They are
+    counted as ``unknown_rows``: a persistent non-zero count means a new
+    provider appeared and a full re-freeze is due, the decision
+    ``needs_rebin`` signals per cell.  The merged dict is a drop-in
+    :func:`stream_drift` profile (a monitor hot-swaps it by restarting
+    with ``--profile-path`` pointing at the re-saved JSON).
     """
-    columns = profile["columns"]
-    keys = profile["keys"]
+    keys, columns, _multi = _shape(profile)
+    cells = _cells(profile)
     nbins, psi_nbins = profile["nbins"], profile["psi_nbins"]
-    profiles = profile["profiles"]
-    base = new_data.select(
-        *[F.col(k).cast("string").alias(k) for k in keys],
-        *[F.expr(c).cast("double").alias(f"v{i}") for i, c in enumerate(columns)],
+    gframe = (
+        _geometry_frame(new_data.sparkSession, keys, columns, cells)
+        if keys else None
     )
-    gframe = _multi_geometry_frame(new_data.sparkSession, keys, columns, profiles)
-    acc: dict[tuple, dict] = {}
-    unknown_rows = 0
-    for r in _multi_grouped_binned_rows(
-        base.join(F.broadcast(gframe), keys, "left"),
-        keys, columns, nbins, with_moments=True, with_range=True,
-    ):
-        if int(r.ci) < 0:
-            unknown_rows += int(r.c)
-            continue
-        cell = (tuple(r[k] for k in keys), columns[int(r.ci)])
-        a = acc.setdefault(
-            cell,
-            {
-                "js": np.zeros(nbins), "psi": np.zeros(psi_nbins),
-                "n": 0, "s": 0.0, "ss": 0.0,
-                "mn": math.inf, "mx": -math.inf,
-            },
-        )
-        a["js"][int(r.jb)] += r.c
-        a["psi"][int(r.pb)] += r.c
-        a["n"] += r.c
-        a["s"] += r.s
-        a["ss"] += r.ss
-        a["mn"] = min(a["mn"], r.mn)
-        a["mx"] = max(a["mx"], r.mx)
-    merged: dict[tuple, dict] = {}
-    for g, cols in profiles.items():
-        merged[g] = {}
-        for c, p in cols.items():
-            a = acc.get((g, c))
-            merged[g][c] = (
-                dict(p)
-                if a is None or a["n"] == 0
-                else _merge_cell(p, a, rebin_rel_threshold)
-            )
-    return {**profile, "profiles": merged, "unknown_rows": int(unknown_rows)}
+    acc, unknown = _accumulate(
+        _binned(
+            _values(new_data, keys, columns), keys, columns, cells,
+            nbins, psi_nbins, gframe,
+        ).collect(),
+        keys, 0, columns, nbins, psi_nbins,
+    )
+    merged = {
+        cell: _merge_cell(p, acc[cell], rebin_rel_threshold)
+        if cell in acc else dict(p)
+        for cell, p in cells.items()
+    }
+    out = _with_cells(profile, merged)
+    if keys:
+        out["unknown_rows"] = int(unknown.get((), 0))
+    return out
 
 
-def stream_drift_multi_grouped(
+def _sink(keys: list[str], multi: bool, windowed: bool) -> tuple[str, str]:
+    """(sink directory name, row DDL) of a stream shape — the one place
+    the sinks' names and row schemas are defined.  Windowed rows carry
+    ``ws``/``we`` epoch seconds here; the writer turns them into
+    ``window_start``/``window_end`` and the ``w`` partition."""
+    name = (
+        "drift_metrics" + "_windowed" * windowed + "_multi" * multi
+        + "_grouped" * bool(keys)
+    )
+    ddl = ", ".join(
+        ["ws bigint", "we bigint"] * windowed
+        + [f"{k} string" for k in keys]
+        + ["column string"] * multi
+        + [_SINK_ROW_SCHEMA]
+        + ["gated_reason string"] * bool(keys)
+    )
+    return name, ddl
+
+
+def stream_drift(
     spark: SparkSession,
     clips_dir: str,
     profile: dict,
@@ -1454,254 +583,132 @@ def stream_drift_multi_grouped(
     min_samples: int = MIN_SAMPLES,
     js_threshold: float = 0.1,
     psi_threshold: float = 0.2,
+    ts_col: str | None = None,
+    window_duration: str = "1 hour",
+    watermark_delay: str = "2 hours",
 ):
-    """G groups x N columns per micro-batch, ONE aggregate — the full
-    monitoring matrix in a single streaming job.
+    """Start a drift stream vs a frozen profile of any shape; returns
+    the streaming query (already drained when ``available_now``).
 
-    Appends one row per (group, column, epoch) to
-    ``<out_dir>/drift_metrics_multi_grouped`` (group keys string-cast +
-    ``column`` + the metric columns + ``gated_reason``).  Per-cell rows
-    are numerically identical to :func:`stream_drift_grouped` run on
-    that column alone (test-asserted).  Row conventions match the
-    grouped single-column variant: unknown-group rows collapse into a
-    NULL-keyed NULL-column ``unknown_group`` row (``n`` counts ROWS
-    with at least one non-null monitored value, not row x column
-    cells); per-cell ``min_samples`` gating; an empty batch writes a
-    NULL ``empty_batch`` placeholder; epoch partitions are overwritten
-    so replays stay idempotent.
+    Epoch mode (``ts_col=None``): per micro-batch ONE binned aggregate
+    (every cell's bin counts + moments in the same job, never a job per
+    group or column) plus O(cells x nbins) driver arithmetic; one row
+    per (cell, epoch) into ``<out_dir>/<sink>/epoch=<k>``, overwritten
+    per epoch so replays stay idempotent.  A global profile reports
+    every column every epoch (an all-null column as a gated ``n=0``
+    row); a keyed one reports the cells present in the batch, per-cell
+    ``min_samples`` gating, the NULL-keyed ``unknown_group`` row (rows
+    with at least one monitored value whose group has no profile or a
+    NULL key) and, for a batch with no values at all, a NULL-keyed
+    ``empty_batch`` row so epoch accounting matches the global sink.
+
+    Windowed (``ts_col`` given): EVENT-TIME windows, late-data-tolerant.
+    The binned aggregate runs under ``window(ts_col)`` with a WATERMARK:
+    Spark's state store holds each window open ``watermark_delay`` past
+    its end, merges late rows into their window, and only then emits it
+    (append mode), so ``foreachBatch`` sees FINALIZED cells only — one
+    row per (window, cell) partitioned by the window start (dynamic
+    overwrite).  Rows later than the watermark drop: bounded state for
+    bounded lateness.  A window finalizes only once the watermark passes
+    its end, and the watermark advances on ARRIVING data — the newest
+    window(s) of an AvailableNow drain emit on the next run.
+
+    Sinks (:func:`_sink`): ``drift_metrics``, ``drift_metrics_multi``,
+    ``drift_metrics_grouped``, ``drift_metrics_multi_grouped``,
+    ``drift_metrics_windowed``, ``drift_metrics_windowed_grouped``; each
+    has its own ``_drift_stream<suffix>_checkpoint``, so modes sharing
+    one ``out_dir`` never reuse a checkpoint or mix row schemas.
     """
-    columns = profile["columns"]
-    keys = profile["keys"]
+    keys, columns, multi = _shape(profile)
+    cells = _cells(profile)
     nbins, psi_nbins = profile["nbins"], profile["psi_nbins"]
-    profiles = profile["profiles"]
-    sink = os.path.join(out_dir, "drift_metrics_multi_grouped")
-    checkpoint = os.path.join(out_dir, "_drift_stream_multi_grouped_checkpoint")
-    out_schema = ", ".join(f"{k} string" for k in keys) + (
-        ", column string, " + _SINK_ROW_SCHEMA + ", gated_reason string"
+    windowed = ts_col is not None
+    nwin = 2 if windowed else 0
+    name, ddl = _sink(keys, multi, windowed)
+    sink = os.path.join(out_dir, name)
+    checkpoint = os.path.join(
+        out_dir, f"_drift_stream{name[len('drift_metrics'):]}_checkpoint"
     )
-    gframe = _multi_geometry_frame(spark, keys, columns, profiles)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        base = batch_df.select(
-            *[F.col(k).cast("string").alias(k) for k in keys],
-            *[
-                F.expr(c).cast("double").alias(f"v{i}")
-                for i, c in enumerate(columns)
-            ],
-        )
-        joined = base.join(F.broadcast(gframe), keys, "left")
-        acc: dict[tuple, dict] = {}
-        n_unknown = 0
-        for r in _multi_grouped_binned_rows(
-            joined, keys, columns, nbins, with_moments=True
-        ):
-            if int(r.ci) < 0:
-                n_unknown += r.c
-                continue
-            cell = (tuple(r[k] for k in keys), columns[int(r.ci)])
-            a = acc.setdefault(
-                cell,
-                {
-                    "js": np.zeros(nbins), "psi": np.zeros(psi_nbins),
-                    "n": 0, "s": 0.0, "ss": 0.0,
-                },
-            )
-            a["js"][int(r.jb)] += r.c
-            a["psi"][int(r.pb)] += r.c
-            a["n"] += r.c
-            a["s"] += r.s
-            a["ss"] += r.ss
-        out_rows = []
-        for (g, c), a in sorted(acc.items()):
-            n, mean, m, gated = _cell_verdict(
-                profiles[g][c], a, min_samples, js_threshold, psi_threshold
-            )
-            out_rows.append(
-                (
-                    *g, c, run_id, int(n), float(mean),
-                    m["js"], m["psi"], m["ks_d"], m["t_stat"],
-                    m["drift_score"],
-                    bool(not gated and m["drift_score"] > 1.0),
-                    bool(gated),
-                    "min_samples" if gated else None,
-                )
-            )
-        if n_unknown:
-            out_rows.append(
-                (
-                    *([None] * len(keys)), None,
-                    run_id, int(n_unknown), 0.0,
-                    0.0, 0.0, 0.0, 0.0, 0.0, False, True, "unknown_group",
-                )
-            )
-        if not out_rows:
-            out_rows.append(
-                (
-                    *([None] * len(keys)), None,
-                    run_id, 0, 0.0,
-                    0.0, 0.0, 0.0, 0.0, 0.0, False, True, "empty_batch",
-                )
-            )
-        spark.createDataFrame(out_rows, out_schema).write.mode(
-            "overwrite"
-        ).parquet(f"{sink}/epoch={int(epoch_id)}")
+    gframe = _geometry_frame(spark, keys, columns, cells) if keys else None
+    # cells reported every epoch even without values: the global columns
+    seed = [((), c) for c in columns] if not keys and not windowed else []
 
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(clips_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
-
-
-def stream_drift_windowed_grouped(
-    spark: SparkSession,
-    clips_dir: str,
-    profile: dict,
-    out_dir: str,
-    schema: str,
-    ts_col: str,
-    window_duration: str = "1 hour",
-    watermark_delay: str = "2 hours",
-    run_id: str = "drift-stream",
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-    min_samples: int = MIN_SAMPLES,
-    js_threshold: float = 0.1,
-    psi_threshold: float = 0.2,
-):
-    """Event-time windowed drift PER GROUP — the windowed x grouped
-    cell of the variant matrix, composed from the existing pieces:
-    the grouped geometry broadcast join (rows bin against their OWN
-    group's frozen range; unknown groups get NULL bins and ride the
-    same aggregate) feeds a watermarked ``window(ts) x keys``
-    aggregation, so late rows merge into the right (window, group)
-    cell and ``foreachBatch`` sees finalized cells only.  One sink row
-    per (window, group) at ``<out>/drift_metrics_windowed_grouped``
-    (+ a NULL-keyed ``unknown_group`` row per window carrying that
-    window's unknown-row count); per-window dynamic partition
-    overwrite keeps replays idempotent.  ``profile`` comes from
-    :func:`reference_profile_grouped`; the AvailableNow newest-window
-    caveat of :func:`stream_drift_windowed` applies unchanged.
-    """
-    column = profile["column"]
-    keys = profile["keys"]
-    nbins, psi_nbins = profile["nbins"], profile["psi_nbins"]
-    profiles = profile["profiles"]
-    sink = os.path.join(out_dir, "drift_metrics_windowed_grouped")
-    checkpoint = os.path.join(
-        out_dir, "_drift_stream_windowed_grouped_checkpoint"
-    )
-    out_schema = (
-        "ws bigint, we bigint, "
-        + ", ".join(f"{k} string" for k in keys)
-        + ", " + _SINK_ROW_SCHEMA + ", gated_reason string"
-    )
-    pframe = _profiles_frame(spark, keys, profiles)
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    v = F.col(column).cast("double")
-    cells = (
-        reader.parquet(clips_dir)
-        .where(v.isNotNull() & F.col(ts_col).isNotNull())
-        .select(
-            *[F.col(k).cast("string").alias(k) for k in keys],
-            F.col(ts_col).alias("ts"),
-            v.alias("v"),
+    if windowed:
+        vals = _values(stream, keys, columns, F.col(ts_col).alias("ts"))
+        stream = _binned(
+            vals.where(F.col("ts").isNotNull() & _any_value(columns))
+            .withWatermark("ts", watermark_delay),
+            keys, columns, cells, nbins, psi_nbins, gframe, window_duration,
         )
-        .join(F.broadcast(pframe), keys, "left")
-        .withWatermark("ts", watermark_delay)
-        .groupBy(
-            F.window("ts", window_duration).alias("w"),
-            *keys,
-            _grouped_js_bin(nbins).alias("jb"),
-            _grouped_psi_bucket().alias("pb"),
-        )
-        .agg(
-            F.count("*").alias("c"),
-            F.sum("v").alias("s"),
-            F.sum(F.col("v") * F.col("v")).alias("ss"),
-        )
-    )
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        rows = batch_df.select(
-            F.col("w.start").cast("long").alias("ws"),
-            F.col("w.end").cast("long").alias("we"),
-            *keys, "jb", "pb", "c", "s", "ss",
-        ).collect()
-        acc: dict = {}
-        unknown: dict = {}
-        for r in rows:
-            wk = (int(r.ws), int(r.we))
-            g = tuple(r[k] for k in keys)
-            if g not in profiles:
-                unknown[wk] = unknown.get(wk, 0) + int(r.c)
-                continue
-            a = acc.setdefault(
-                (wk, g),
-                {
-                    "js": np.zeros(nbins), "psi": np.zeros(psi_nbins),
-                    "n": 0, "s": 0.0, "ss": 0.0,
-                },
-            )
-            a["js"][int(r.jb)] += r.c
-            a["psi"][int(r.pb)] += r.c
-            a["n"] += r.c
-            a["s"] += r.s
-            a["ss"] += r.ss
-        out_rows = []
-        for (wk, g), a in sorted(acc.items()):
+        if windowed:
+            # window bounds collect as epoch-second LONGS — naive driver
+            # datetimes are ambiguous across a DST fall-back
+            rows = batch_df.select(
+                F.col("w.start").cast("long").alias("ws"),
+                F.col("w.end").cast("long").alias("we"),
+                *[c for c in batch_df.columns if c != "w"],
+            ).collect()
+        else:
+            rows = _binned(
+                _values(batch_df, keys, columns), keys, columns, cells,
+                nbins, psi_nbins, gframe,
+            ).collect()
+        acc, unknown = _accumulate(
+            rows, ["ws", "we"][:nwin] + keys, nwin, columns, nbins,
+            psi_nbins, seed,
+        )
+        out = []
+        for (g, c), a in sorted(
+            acc.items(), key=lambda kv: (kv[0][0], columns.index(kv[0][1]))
+        ):
             n, mean, m, gated = _cell_verdict(
-                profiles[g], a, min_samples, js_threshold, psi_threshold
+                cells[(g[nwin:], c)], a, min_samples, js_threshold, psi_threshold
             )
-            out_rows.append(
-                (
-                    *wk, *g, run_id, int(n), float(mean),
-                    m["js"], m["psi"], m["ks_d"], m["t_stat"],
-                    m["drift_score"],
-                    bool(not gated and m["drift_score"] > 1.0),
-                    bool(gated),
-                    "min_samples" if gated else None,
-                )
+            out.append((
+                *g, *[c] * multi, run_id, int(n), float(mean),
+                m["js"], m["psi"], m["ks_d"], m["t_stat"], m["drift_score"],
+                bool(not gated and m["drift_score"] > 1.0), bool(gated),
+                *["min_samples" if gated else None] * bool(keys),
+            ))
+        if keys:
+            # NULL keys + a marker column: a real group VALUE named
+            # 'unknown_group' stays unambiguous; an epoch without values
+            # still claims its partition ('empty_batch')
+            marks = sorted(unknown.items())
+            if not (out or marks or windowed):
+                marks = [((), 0)]
+            for w, cnt in marks:
+                out.append((
+                    *w, *[None] * (len(keys) + multi), run_id, int(cnt), 0.0,
+                    0.0, 0.0, 0.0, 0.0, 0.0, False, True,
+                    "unknown_group" if cnt else "empty_batch",
+                ))
+        if not windowed:
+            spark.createDataFrame(out, ddl).write.mode("overwrite").parquet(
+                f"{sink}/epoch={int(epoch_id)}"
             )
-        for wk, c in sorted(unknown.items()):
-            out_rows.append(
-                (
-                    *wk, *([None] * len(keys)),
-                    run_id, int(c), 0.0,
-                    0.0, 0.0, 0.0, 0.0, 0.0, False, True, "unknown_group",
-                )
-            )
-        if not out_rows:
-            return
-        (
-            spark.createDataFrame(out_rows, out_schema)
-            .select(
+        elif out:
+            # ONE write for all finalized windows of the batch: dynamic
+            # partition overwrite replaces exactly the written windows'
+            # partitions (a crash-replay rewrites identical content)
+            df = spark.createDataFrame(out, ddl)
+            df.select(
                 F.timestamp_seconds("ws").alias("window_start"),
                 F.timestamp_seconds("we").alias("window_end"),
-                *keys, "run_id", "n", "batch_mean", "js", "psi", "ks_d",
-                "t_stat", "drift_score", "drift_detected", "gated",
-                "gated_reason",
+                *df.columns[2:],
                 F.col("ws").alias("w"),
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("w")
-            .parquet(sink)
-        )
+            ).write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("w").parquet(sink)
 
     writer = (
-        cells.writeStream.outputMode("append")
+        stream.writeStream.outputMode("append")
         .foreachBatch(process)
         .option("checkpointLocation", checkpoint)
     )
@@ -1713,14 +720,41 @@ def stream_drift_windowed_grouped(
     return q
 
 
+# ---- legacy per-shape names: the profile carries keys and columns ----------
+
+reference_profile_multi = reference_profile
+update_reference_profile_grouped = update_reference_profile
+update_reference_profile_multi = update_reference_profile
+update_reference_profile_multi_grouped = update_reference_profile
+stream_drift_grouped = stream_drift
+stream_drift_multi = stream_drift
+stream_drift_multi_grouped = stream_drift
+
+
+def reference_profile_grouped(ref, keys, column, nbins=40, psi_nbins=10):
+    """:func:`reference_profile` per group of ``keys``."""
+    return reference_profile(ref, column, nbins, psi_nbins, keys=keys)
+
+
+def reference_profile_multi_grouped(ref, keys, columns, nbins=40, psi_nbins=10):
+    """:func:`reference_profile` per (group of ``keys``, column)."""
+    return reference_profile(ref, list(columns), nbins, psi_nbins, keys=keys)
+
+
+def stream_drift_windowed(spark, clips_dir, profile, out_dir, schema, ts_col, **kw):
+    """Event-time windowed :func:`stream_drift` (global or grouped)."""
+    return stream_drift(spark, clips_dir, profile, out_dir, schema, ts_col=ts_col, **kw)
+
+
+stream_drift_windowed_grouped = stream_drift_windowed
+
+
 def save_profile(profile: dict, path: str) -> None:
     """Persist a frozen profile (global or grouped) as JSON.
 
     The profile IS the drift contract: a monitor restart must compare
     against the SAME frozen reference even if the reference table has
     since changed.  JSON keeps it engine-agnostic and diffable."""
-    import json
-
     out = dict(profile)
     if "profiles" in out:  # grouped: tuple keys -> joined string keys
         out = {
@@ -1735,8 +769,6 @@ def save_profile(profile: dict, path: str) -> None:
 
 def load_profile(path: str) -> dict:
     """Load a profile written by :func:`save_profile`."""
-    import json
-
     with open(path) as f:
         prof = json.load(f)
     if "profiles" in prof:

@@ -9,7 +9,9 @@ os.environ.setdefault("SPARK_GRAFT_SYNTH_ROOT", "/root/repo/data/synth")
 def spark():
     from llm_drift_detector_spark.session import get_spark
 
-    s = get_spark(master="local[8]", shuffle_partitions=8)
+    # session defaults: local[$SPARK_GRAFT_CPUS] (local[*] when unset)
+    # and the engine's default shuffle partitions
+    s = get_spark()
     yield s
 
 
