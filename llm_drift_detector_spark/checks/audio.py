@@ -71,6 +71,13 @@ _DIFFERING = "__differing__"
 
 _BYTES_PER_SAMPLE = {"pcm_s16le": 2, "opus": 1}  # length-derivable codecs
 
+# Clips-row identity for the fetch joins: k reference rows sharing a
+# candidate's clip_id join k copies of its clips row, all in one task, so
+# the SNR kernels emit at most one verdict per ``__row`` (the first
+# violating reference row; the verdict fires iff ANY reference row
+# violates, the same rule the candidate EXISTS applies to hashes).
+_ROW_ID = F.monotonically_increasing_id
+
 
 def wav_canonical_pred() -> F.Column:
     """Native predicate: payload is a canonical-layout PCM wav (44-byte
@@ -201,8 +208,11 @@ def _decoded_dur_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordB
 
 def _snr_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """SNR compare for differing-payload rows; rows whose dur/decode is
-    bad are skipped (the dur_ms checks own them — disjoint classes)."""
+    bad are skipped (the dur_ms checks own them — disjoint classes).
+    One verdict per clips row (``__row``, see ``_ROW_ID``)."""
+    done: set[int] = set()
     for b in batches:
+        row_ids = b.column("__row").to_pylist()
         ids = b.column("clip_id")
         payloads = b.column("bytes")
         srs = b.column("sr_hz")
@@ -212,6 +222,8 @@ def _snr_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ref_codecs = b.column("ref_codec").to_pylist()
         rows: list[tuple[str, str, str]] = []
         for i in range(b.num_rows):
+            if row_ids[i] in done:
+                continue
             pcm = _decode_np(payloads[i].as_py(), codecs_[i])
             if pcm is None:
                 continue  # decode failure -> dur_ms_mismatch path owns it
@@ -225,6 +237,7 @@ def _snr_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             violation = _snr_violation(ids[i].as_py(), ref_pcm, pcm)
             if violation is not None:
                 rows.append(violation)
+                done.add(row_ids[i])
         yield from _emit(rows)
 
 
@@ -269,8 +282,11 @@ def _decode_and_snr_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Reco
     __dur_check row emits dur_ms_mismatch and suppresses SNR; on a
     native-tier row it just suppresses SNR (the native branch owns its
     dur verdict); SNR fires only for decodable, dur-consistent rows with
-    a reference payload attached."""
+    a reference payload attached.  One verdict per clips row
+    (``__row``, see ``_ROW_ID``)."""
+    done: set[int] = set()
     for b in batches:
+        row_ids = b.column("__row").to_pylist()
         ids = b.column("clip_id")
         payloads = b.column("bytes")
         srs = b.column("sr_hz")
@@ -281,12 +297,15 @@ def _decode_and_snr_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Reco
         ref_codecs = b.column("ref_codec").to_pylist()
         rows: list[tuple[str, str, str]] = []
         for i in range(b.num_rows):
+            if row_ids[i] in done:
+                continue
             pcm = _decode_np(payloads[i].as_py(), codecs_[i])
             if pcm is None:
                 if dur_checks[i]:
                     rows.append(
                         (ids[i].as_py(), "dur_ms_mismatch", json.dumps({"error": "decode_failed"}))
                     )
+                    done.add(row_ids[i])
                 continue
             sr = srs[i].as_py()
             implied = len(pcm) * 1000.0 / sr if sr else float("inf")
@@ -299,6 +318,7 @@ def _decode_and_snr_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Reco
                             json.dumps({"dur_ms": durs[i].as_py(), "implied_ms": round(implied, 3)}),
                         )
                     )
+                    done.add(row_ids[i])
                 continue
             if not refs[i].is_valid:
                 continue
@@ -306,6 +326,7 @@ def _decode_and_snr_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Reco
             violation = _snr_violation(ids[i].as_py(), ref_pcm, pcm)
             if violation is not None:
                 rows.append(violation)
+                done.add(row_ids[i])
         yield from _emit(rows)
 
 
@@ -573,7 +594,7 @@ def audio_invariant_violations(
     # broadcast — fall back to the shuffled pair-join fetch.
     if len(ids) > max_broadcast_fetch_ids:
         ids_df = spark.createDataFrame([(i,) for i in ids], "clip_id string")
-        fetch_cur = cur.join(F.broadcast(ids_df), "clip_id")
+        fetch_cur = cur.join(F.broadcast(ids_df), "clip_id").withColumn("__row", _ROW_ID())
         fetch_ref = reference.select(
             "clip_id",
             F.col("bytes").alias("ref_bytes"),
@@ -597,11 +618,12 @@ def audio_invariant_violations(
         (F.col("codec") == "wav") & ~wav_canonical_pred()
     )
     merged_in = (
-        cur.join(F.broadcast(fetch_ref), "clip_id", "left")
+        cur.withColumn("__row", _ROW_ID())
+        .join(F.broadcast(fetch_ref), "clip_id", "left")
         .where(decode_cond | F.col("ref_bytes").isNotNull())
         .select(
             "clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-            decode_cond.alias("__dur_check"), "ref_bytes", "ref_codec",
+            decode_cond.alias("__dur_check"), "ref_bytes", "ref_codec", "__row",
         )
     )
     if salted:
@@ -635,14 +657,14 @@ def _audio_invariants_lazy_fallback(
     id_rows = differing_ids.limit(max_fetch_ids + 1).collect()
     if len(id_rows) <= max_fetch_ids:
         ids = [r.clip_id for r in id_rows]
-        fetch_cur = cur.where(F.col("clip_id").isin(ids))
+        fetch_cur = cur.where(F.col("clip_id").isin(ids)).withColumn("__row", _ROW_ID())
         fetch_ref = reference.select(
             "clip_id",
             F.col("bytes").alias("ref_bytes"),
             F.col("codec").alias("ref_codec"),
         ).where(F.col("clip_id").isin(ids))
     else:
-        fetch_cur = cur.join(F.broadcast(differing_ids), "clip_id")
+        fetch_cur = cur.join(F.broadcast(differing_ids), "clip_id").withColumn("__row", _ROW_ID())
         fetch_ref = reference.select(
             "clip_id",
             F.col("bytes").alias("ref_bytes"),

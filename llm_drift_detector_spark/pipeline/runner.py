@@ -10,12 +10,18 @@ killed job resumes only unfinished partitions.  Design:
 - Work is keyed by STABLE logical buckets ``pmod(xxhash64(clip_id), B)``
   (checks/base.py) — identical on any cluster size, unlike physical
   partition ids.
-- Buckets are processed in ``groups`` sequential Spark jobs (default 4).
+- Buckets are processed in ``groups`` bucket groups (default 4), run as
+  a two-deep pipeline: group g+1 plans, runs its eager audio pass and
+  writes while group g finishes its write, read-back and checkpoint.
   Each group writes its violation rows to ``violations/group=g/``
-  (overwrite = idempotent re-run) and then appends one checkpoint row
-  per bucket with lineage + metrics.  A kill between groups loses at
-  most one group's work; re-running the same run_id anti-joins the
-  checkpoint table and executes only unfinished groups.
+  (overwrite = idempotent re-run); once that write has committed, the
+  calling thread appends one checkpoint row per bucket with lineage +
+  metrics (one append at a time).  A kill loses at most the two groups
+  in flight; re-running the same run_id anti-joins the checkpoint table
+  and executes only unfinished groups.  ``executed_groups[i]["secs"]``
+  is the time from the previous checkpoint commit (or the start of the
+  group phase) to this group's commit, so its prefix sums are the
+  commit times.
 - At 10^12 rows the input Iceberg table should be partitioned by
   ``bucket(clip_id, B)`` so each group's scan prunes to its buckets;
   on plain parquet the group filter is a predicate on a computed column
@@ -29,10 +35,12 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from ..config import (
     CODEC_WHITELIST,
@@ -59,6 +67,20 @@ CHECK_VERSIONS = {
     "audio_quality": "1.0",
     "payload_duplicate": "1.0",
 }
+
+VIOLATIONS_DDL = (
+    "run_id string, check_name string, clip_id string, detail string, "
+    "partition_id int"
+)
+CHECKPOINT_DDL = (
+    "run_id string, partition_id int, status string, rows_processed bigint, "
+    "violations_emitted bigint, lineage string"
+)
+
+# bucket groups run_validation keeps in flight: one group's planning and
+# bookkeeping overlap the next group's execution; a kill loses at most
+# this many groups' work
+_GROUPS_IN_FLIGHT = 2
 
 # quality GATES are policy, not reference invariants: they run only when
 # explicitly listed in enabled_checks (enabled_checks=None means "all
@@ -321,13 +343,22 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
+def _checkpoints(spark: SparkSession, cfg: RunConfig) -> DataFrame:
+    """This run's checkpoint rows (explicit schema: no inference job)."""
+    return (
+        spark.read.schema(CHECKPOINT_DDL)
+        .parquet(os.path.join(cfg.out_dir, "checkpoints"))
+        .where(F.col("run_id") == cfg.run_id)
+    )
+
+
 def _completed_buckets(spark: SparkSession, cfg: RunConfig) -> set[int]:
     path = os.path.join(cfg.out_dir, "checkpoints")
     if not _path_exists(spark, path):  # first run: nothing checkpointed yet
         return set()
-    cp = spark.read.parquet(path)
     rows = (
-        cp.where((F.col("run_id") == cfg.run_id) & (F.col("status") != "pending"))
+        _checkpoints(spark, cfg)
+        .where(F.col("status") != "pending")
         .select("partition_id")
         .distinct()
         .collect()
@@ -347,8 +378,11 @@ def run_validation(
     """Execute the full validation run; resumable by re-calling with the
     same run_id + out_dir.  Returns a summary dict.
 
-    ``max_groups`` processes at most that many bucket groups then stops —
-    the kill-and-resume test hook (simulates a job dying mid-run).
+    ``max_groups`` processes the first that many pending bucket groups
+    (sorted by group id) then stops — the kill-and-resume test hook
+    (simulates a job dying mid-run).  A group that raises starts no
+    further groups; the other in-flight group still checkpoints, then
+    the exception is re-raised.
     """
     os.makedirs(cfg.out_dir, exist_ok=True)
     done = _completed_buckets(spark, cfg)
@@ -358,14 +392,17 @@ def run_validation(
     for b in pending:
         groups.setdefault(b % cfg.groups, []).append(b)
 
-    def group_pred(df: DataFrame, buckets: list[int]):
+    def bucket_of(df: DataFrame):
         # a materialized bucket_id PARTITION column (write_bucket_partitioned
         # / Iceberg bucket(clip_id, B)) turns the group filter into partition
         # pruning; otherwise it's a computed predicate (full scan per group —
         # correct, but the documented cost on non-bucketed storage)
         if "bucket_id" in df.columns:
-            return F.col("bucket_id").isin(buckets)
-        return bucket_id("clip_id", cfg.n_buckets).isin(buckets)
+            return F.col("bucket_id")
+        return bucket_id("clip_id", cfg.n_buckets)
+
+    def group_pred(df: DataFrame, buckets: list[int]):
+        return bucket_of(df).isin(buckets)
 
     def _validate_bucket_layout(df: DataFrame, name: str) -> None:
         # a layout written with a different n_buckets (or hash/salt) than
@@ -395,47 +432,36 @@ def run_validation(
         if "bucket_id" in df.columns:
             _validate_bucket_layout(df, name)
 
-    executed_groups = []
-    executed_buckets: set[int] = set()
-    for g, buckets in sorted(groups.items()):
-        if max_groups is not None and len(executed_groups) >= max_groups:
-            break
-        t0 = time.time()
-        clips_g = clips.where(group_pred(clips, buckets))
-        tr_g = transcripts.where(group_pred(transcripts, buckets))
-        ref_g = reference.where(group_pred(reference, buckets))
+    todo = sorted(groups.items())[:max_groups]
+    lineage = {
+        "salt": cfg.salt,
+        "n_buckets": cfg.n_buckets,
+        "check_versions": CHECK_VERSIONS,
+        "mode": "exact" if cfg.mode.exact else "sketch",
+        **(lineage_extra or {}),
+    }
 
+    def run_group(g: int, buckets: list[int]) -> dict[int, int]:
+        """Write one group's violations; return its per-bucket counts,
+        read back from the committed files (exact, no recompute)."""
         vio = _violations_for_group(
-            clips_g, tr_g, ref_g, cfg, full_view=False
+            clips.where(group_pred(clips, buckets)),
+            transcripts.where(group_pred(transcripts, buckets)),
+            reference.where(group_pred(reference, buckets)),
+            cfg, full_view=False,
         ).withColumn(
             "run_id", F.lit(cfg.run_id)
         ).select("run_id", "check_name", "clip_id", "detail", "partition_id")
         group_path = os.path.join(cfg.out_dir, "violations", f"group={g}")
         vio.write.mode("overwrite").parquet(group_path)
+        written = spark.read.schema(VIOLATIONS_DDL).parquet(group_path)
+        return {
+            r.partition_id: r["count"]
+            for r in written.groupBy("partition_id").count().collect()
+        }
 
-        # read back what we wrote (exact counts, no recompute) and build
-        # the per-bucket verdict + checkpoint rows
-        written = spark.read.parquet(group_path)
-        vio_counts = {
-            r.partition_id: r.cnt
-            for r in written.groupBy("partition_id").agg(F.count("*").alias("cnt")).collect()
-        }
-        row_counts = {
-            r.b: r.cnt
-            for r in clips_g.groupBy(bucket_id("clip_id", cfg.n_buckets).alias("b"))
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        }
-        lineage = json.dumps(
-            {
-                "group": g,
-                "salt": cfg.salt,
-                "n_buckets": cfg.n_buckets,
-                "check_versions": CHECK_VERSIONS,
-                "mode": "exact" if cfg.mode.exact else "sketch",
-                **(lineage_extra or {}),
-            }
-        )
+    def checkpoint(g: int, buckets: list[int], vio_counts: dict[int, int]) -> None:
+        group_lineage = json.dumps({"group": g, **lineage})
         cp_rows = [
             (
                 cfg.run_id,
@@ -443,18 +469,67 @@ def run_validation(
                 "fail" if vio_counts.get(b, 0) > 0 else "pass",
                 int(row_counts.get(b, 0)),
                 int(vio_counts.get(b, 0)),
-                lineage,
+                group_lineage,
             )
             for b in buckets
         ]
-        cp = spark.createDataFrame(
-            cp_rows,
-            "run_id string, partition_id int, status string, rows_processed bigint, "
-            "violations_emitted bigint, lineage string",
-        ).withColumn("completed_at", F.current_timestamp())
-        cp.write.mode("append").parquet(os.path.join(cfg.out_dir, "checkpoints"))
-        executed_groups.append({"group": g, "buckets": buckets, "secs": time.time() - t0})
-        executed_buckets.update(buckets)
+        spark.createDataFrame(cp_rows, CHECKPOINT_DDL).withColumn(
+            "completed_at", F.current_timestamp()
+        ).write.mode("append").parquet(os.path.join(cfg.out_dir, "checkpoints"))
+
+    # Checkpoints are appended from this thread only (two concurrent
+    # appends would share checkpoints/_temporary), and the next group
+    # starts after that append, so at most two groups are uncheckpointed.
+    # Each group is wrapped at submission: it runs with its own copy of
+    # the caller's local properties (job group, scheduler pool), which
+    # Spark mutates per query.
+    executed_groups = []
+    executed_buckets: set[int] = set()
+    failure: Exception | None = None
+    queue = iter(todo)
+    t_last = time.time()
+    with ThreadPoolExecutor(max_workers=_GROUPS_IN_FLIGHT) as pool:
+        inflight: dict = {}
+
+        def submit_next() -> None:
+            nxt = next(queue, None)
+            if nxt is not None:
+                target = inheritable_thread_target(spark)(run_group)
+                inflight[pool.submit(target, *nxt)] = nxt
+
+        for _ in range(_GROUPS_IN_FLIGHT):
+            submit_next()
+        # row counts for every bucket this call will checkpoint, in one
+        # pass, while the first groups run
+        todo_buckets = [b for _, bs in todo for b in bs]
+        row_counts = {
+            r.b: r["count"]
+            for r in clips.where(group_pred(clips, todo_buckets))
+            .groupBy(bucket_of(clips).alias("b"))
+            .count()
+            .collect()
+        } if todo else {}
+        while inflight:
+            finished, _ = wait(inflight, return_when=FIRST_COMPLETED)
+            for fut in sorted(finished, key=lambda f: inflight[f][0]):
+                g, buckets = inflight.pop(fut)
+                try:
+                    checkpoint(g, buckets, fut.result())
+                except Exception as e:  # drain the pool, then re-raise
+                    failure = failure or e
+                    continue
+                now = time.time()
+                # secs since the previous commit: the prefix sums are the
+                # commit times measured from the start of the group phase
+                executed_groups.append(
+                    {"group": g, "buckets": buckets, "secs": now - t_last}
+                )
+                t_last = now
+                executed_buckets.update(buckets)
+                if failure is None:
+                    submit_next()
+    if failure is not None:
+        raise failure
 
     # global metrics: full-input passes (profile + distribution_drift) run
     # ONLY when this call completes the run AND they were not already
@@ -493,7 +568,7 @@ def run_validation(
             ).select(
                 "run_id", "check_name", "clip_id", "detail", "partition_id"
             ).write.mode("overwrite").parquet(pd_path)
-        payload_dup_count = spark.read.parquet(pd_path).count()
+        payload_dup_count = spark.read.schema(VIOLATIONS_DDL).parquet(pd_path).count()
     metrics_rows = []
     prof = (
         profile(clips, ["sr_hz", "dur_ms"], cfg.mode).collect() if compute_metrics else []
@@ -596,18 +671,18 @@ def run_validation(
         ).withColumn("timestamp", F.current_timestamp())
         metrics.write.mode("overwrite").parquet(metrics_path)
 
-    cp_all = spark.read.parquet(os.path.join(cfg.out_dir, "checkpoints")).where(
-        F.col("run_id") == cfg.run_id
-    )
-    summary = {
+    status = F.col("status")
+    totals = _checkpoints(spark, cfg).agg(
+        F.count(F.when(status == "pass", 1)).alias("buckets_pass"),
+        F.count(F.when(status == "fail", 1)).alias("buckets_fail"),
+        F.coalesce(F.sum("rows_processed"), F.lit(0)).alias("rows_processed"),
+        F.coalesce(F.sum("violations_emitted"), F.lit(0)).alias("violations_emitted"),
+    ).collect()[0]
+    return {
         "run_id": cfg.run_id,
         "global_metrics_computed": compute_metrics,
         "payload_duplicate_rows": payload_dup_count,
         "resumed_buckets_skipped": sorted(done),
         "executed_groups": executed_groups,
-        "buckets_pass": cp_all.where(F.col("status") == "pass").count(),
-        "buckets_fail": cp_all.where(F.col("status") == "fail").count(),
-        "rows_processed": (cp_all.agg(F.sum("rows_processed")).collect()[0][0] or 0),
-        "violations_emitted": (cp_all.agg(F.sum("violations_emitted")).collect()[0][0] or 0),
+        **totals.asDict(),
     }
-    return summary

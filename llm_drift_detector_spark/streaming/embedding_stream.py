@@ -443,12 +443,14 @@ def embedding_reference_profile_grouped(
 
     One posexplode job for all groups' centroids + one grouped moments
     job; O(#groups x d) driver memory.  Keys canonicalize to string
-    SPARK-side (same rule as the distribution profiles).
+    SPARK-side and rows with any NULL key are not profiled (both the
+    distribution profiles' rules); the stream and the update count
+    them as unknown-group rows.
     """
     base = _valid(ref, column).select(
         *[F.col(k).cast("string").alias(k) for k in keys],
         F.col(column).alias("e"),
-    )
+    ).dropna(subset=list(keys))
     cent = (
         base.select(*keys, F.posexplode("e").alias("pos", "x"))
         .groupBy(*keys, "pos")

@@ -599,7 +599,9 @@ def text_reference_profile_grouped(
     Driver state is O(Σ per-group |window vocab| + #groups x #topics) —
     bounded by drift-WINDOW vocabulary under reference semantics, same
     contract as the global profile.  Keys canonicalize to string
-    SPARK-side (the distribution/embedding profiles' rule).
+    SPARK-side and rows with any NULL key are not profiled (the
+    distribution/embedding profiles' rules); the stream and the update
+    count them as unknown-group rows.
 
     Unlike the global builder there is no MIN_SAMPLES refusal: gating
     is per (group, batch) at stream time, and a small group's baseline
@@ -609,7 +611,7 @@ def text_reference_profile_grouped(
         *[F.col(k).cast("string").alias(k) for k in keys],
         column,
         *([topic_column] if topic_column else []),
-    )
+    ).dropna(subset=list(keys))
     if base.limit(1).count() == 0:
         raise ValueError(f"reference window has no non-null {column} docs")
     n_rows = base.groupBy(*keys).agg(F.count("*").alias("n")).collect()

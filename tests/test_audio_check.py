@@ -179,3 +179,45 @@ def test_wav_native_tier_edge_layouts(spark):
     deep_pairs = [(r.check_name, r.clip_id) for r in deep]
     assert len(deep_pairs) == len(set(deep_pairs)), deep_pairs  # no double-emit
     assert deep_pairs.count(("dur_ms_mismatch", "trunc")) == 1
+
+
+def _fetched_ids(df) -> set[str]:
+    """The targeted SNR fetch's id set, read off the returned plan: the
+    rows of the broadcast id frame (a one-column ``clip_id`` leaf) or,
+    failing that, the literals of the ``clip_id IN``/``INSET`` filter."""
+    import re
+
+    from pyspark.sql import DataFrame
+
+    spark = df.sparkSession
+    plan = df._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        out = leaf.output()
+        if leaf.nodeName() == "LogicalRDD" and [
+            out.apply(j).name() for j in range(out.size())
+        ] == ["clip_id"]:
+            jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+                spark._jsparkSession, leaf
+            )
+            return {r.clip_id for r in DataFrame(jdf, spark).collect()}
+    text = plan.toString()
+    m = re.search(r"clip_id#\d+ INSET ([^,()\s]+(?:, [^,()\s]+)*)", text)
+    if m:
+        return set(m.group(1).split(", "))
+    m = re.search(r"clip_id#\d+ IN \(([^)]*)\)", text)
+    return set(m.group(1).split(",")) if m else set()
+
+
+@pytest.mark.parametrize("shape", [{}, {"max_fetch_ids": 0}], ids=["in_list", "id_frame"])
+def test_snr_fetch_targets_exactly_the_payload_differing_ids(synth, shape):
+    """The SNR stage fetches reference payloads for exactly the ids whose
+    payload differs from the reference: truncated (i%1000==17), resampled
+    (i%1000==13) and corrupted (i%2000==19) rows.  A candidate test that
+    marks every clip as differing still emits the right verdicts (the
+    extra ids compare identical payloads), so only the plan shows it."""
+    exp = synth["expected"]
+    differing = exp["dur_ms_mismatch"] | exp["snr_allclose"]
+    df = audio_invariant_violations(synth["clips"], synth["reference"], **shape)
+    assert _fetched_ids(df) == differing

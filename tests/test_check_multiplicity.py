@@ -72,3 +72,30 @@ def test_relational_checks_run_without_a_transcript_column(spark):
         ("referential_clip_orphan", "c1"),
         ("referential_transcript_orphan", "t9"),
     }
+
+
+@pytest.mark.parametrize("fetch", ["broadcast", "pair_join"])
+def test_duplicated_reference_rows_of_snr_candidates_emit_one_verdict(synth, fetch):
+    """k reference rows for an SNR-candidate id must not emit k verdicts
+    per clips row, on the broadcast fetch (candidates at most
+    ``max_broadcast_fetch_ids``) and on the shuffled pair-join fetch
+    (above it)."""
+    from llm_drift_detector_spark.checks.audio import audio_invariant_violations
+
+    clips, ref, exp = synth["clips"], synth["reference"], synth["expected"]
+    candidates = sorted(exp["dur_ms_mismatch"] | exp["snr_allclose"])
+    dup = ref.where(F.col("clip_id").isin(candidates))
+    tripled = ref.unionByName(dup).unionByName(dup)
+    assert tripled.where(F.col("clip_id") == candidates[0]).count() == 3
+    cap = len(candidates) if fetch == "broadcast" else len(candidates) - 1
+
+    got = Counter(
+        (r.check_name, r.clip_id)
+        for r in audio_invariant_violations(
+            clips, tripled, max_broadcast_fetch_ids=cap
+        ).collect()
+    )
+    want = Counter(
+        (c, i) for c in ("dur_ms_mismatch", "snr_allclose") for i in exp[c]
+    )
+    assert got == want

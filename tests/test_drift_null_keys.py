@@ -67,3 +67,53 @@ def test_null_key_rows_land_in_the_unknown_group_row(spark, tmp_path):
     assert rows["a"].n == 30 and not rows["a"].gated
     unknown = rows[None]
     assert unknown.gated_reason == "unknown_group" and unknown.n == 9
+
+
+def test_embedding_grouped_profile_skips_null_keys_and_round_trips(spark, tmp_path):
+    from llm_drift_detector_spark.streaming import (
+        embedding_reference_profile_grouped,
+        load_profile,
+        save_profile,
+        update_embedding_reference_profile_grouped,
+    )
+
+    ddl = "provider string, embedding array<float>"
+    rows = [
+        (p, [float(i % 5), float((i * 3) % 7), 1.0])
+        for p in ("a", "b", None)
+        for i in range(40)
+    ]
+    prof = embedding_reference_profile_grouped(
+        spark.createDataFrame(rows, ddl), ["provider"], "embedding"
+    )
+    assert set(prof["profiles"]) == {("a",), ("b",)}
+    path = str(tmp_path / "embedding_grouped.json")
+    save_profile(prof, path)
+    assert load_profile(path) == prof
+    new = spark.createDataFrame([("a", [1.0, 2.0, 3.0]), (None, [1.0, 2.0, 3.0])], ddl)
+    assert update_embedding_reference_profile_grouped(prof, new)["unknown_rows"] == 1
+
+
+def test_text_grouped_profile_skips_null_keys_and_round_trips(spark, tmp_path):
+    from llm_drift_detector_spark.streaming import (
+        load_profile,
+        save_profile,
+        text_reference_profile_grouped,
+        update_text_reference_profile_grouped,
+    )
+
+    ddl = "provider string, transcript string"
+    rows = [
+        (p, f"the {w} sat on the mat. it was {w}.")
+        for p in ("a", "b", None)
+        for w in ("cat", "dog", "bird", "fish")
+    ]
+    prof = text_reference_profile_grouped(
+        spark.createDataFrame(rows, ddl), ["provider"], "transcript"
+    )
+    assert set(prof["profiles"]) == {("a",), ("b",)}
+    path = str(tmp_path / "text_grouped.json")
+    save_profile(prof, path)
+    assert load_profile(path) == prof
+    new = spark.createDataFrame([("a", "the cat sat."), (None, "the cat sat.")], ddl)
+    assert update_text_reference_profile_grouped(prof, new)["unknown_rows"] == 1

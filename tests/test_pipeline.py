@@ -90,6 +90,67 @@ def test_kill_and_resume_matches_uninterrupted(spark, tables, tmp_path):
     assert len(per_bucket) == cfg_b.n_buckets
 
 
+def test_failed_group_checkpoints_finished_groups_and_resumes(
+    spark, tables, tmp_path, monkeypatch
+):
+    """Groups run two at a time: when the third group raises, the call
+    raises, the groups that finished are checkpointed exactly once, the
+    failed group is not, and a resume runs only the unfinished groups."""
+    import threading
+
+    import llm_drift_detector_spark.pipeline.runner as runner_mod
+
+    base = dict(
+        spark=spark,
+        clips=tables["clips"],
+        transcripts=tables["transcripts"],
+        reference=tables["reference"],
+    )
+    real = runner_mod._violations_for_group
+    calls = []
+    lock = threading.Lock()
+
+    def third_call_fails(*a, **k):
+        # groups start in sorted order, and the third starts only after
+        # one of the first two finished: the third call is group 2
+        with lock:
+            calls.append(None)
+            n = len(calls)
+        if n == 3:
+            raise RuntimeError("group 2 failed")
+        return real(*a, **k)
+
+    cfg = RunConfig(run_id="failed", out_dir=str(tmp_path / "f"))
+    monkeypatch.setattr(runner_mod, "_violations_for_group", third_call_fails)
+    with pytest.raises(RuntimeError, match="group 2 failed"):
+        run_validation(cfg=cfg, **base)
+    monkeypatch.setattr(runner_mod, "_violations_for_group", real)
+
+    def group_of(b):
+        return b % cfg.groups
+
+    cp = [
+        r.partition_id
+        for r in spark.read.parquet(f"{cfg.out_dir}/checkpoints").collect()
+    ]
+    assert len(cp) == len(set(cp))
+    done_groups = {group_of(b) for b in cp}
+    assert {0, 1} <= done_groups and 2 not in done_groups
+    assert sorted(cp) == [b for b in range(cfg.n_buckets) if group_of(b) in done_groups]
+
+    s = run_validation(cfg=cfg, **base)
+    assert {g["group"] for g in s["executed_groups"]} == set(range(cfg.groups)) - done_groups
+    cp2 = spark.read.parquet(f"{cfg.out_dir}/checkpoints").groupBy("partition_id").count()
+    assert sorted(r.partition_id for r in cp2.collect()) == list(range(cfg.n_buckets))
+    assert all(r["count"] == 1 for r in cp2.collect())
+
+    cfg_full = RunConfig(run_id="unbroken", out_dir=str(tmp_path / "u"))
+    run_validation(cfg=cfg_full, **base)
+    assert violations_by_check(spark, cfg.out_dir, "failed") == violations_by_check(
+        spark, cfg_full.out_dir, "unbroken"
+    )
+
+
 def test_rerun_completed_run_is_noop(spark, tables, tmp_path):
     cfg = RunConfig(run_id="noop", out_dir=str(tmp_path / "c"))
     run_validation(
