@@ -42,32 +42,27 @@ Writes to --out:
   --embedding-column is given (stream_embedding_drift vs a frozen
   centroid profile; the reference's detector registry runs the
   distribution AND embedding families per cadence,
-  ``detectors/__init__.py:58-86`` — this closes the embedding half in
-  continuous mode)
+  ``detectors/__init__.py:58-86``), or ``embedding_metrics_grouped/``
+  one row per (group, epoch) with --embedding-group-keys
 - ``text_metrics/``       one text-drift row per epoch, when
   --text-column is given (stream_text_drift vs a frozen text profile:
   lexical C13/C14 + perplexity C11 + topic C12 with
-  --text-topic-column — the remaining semantic half of the
-  reference's detector registry, now also continuous)
-- ``text_metrics_grouped/`` one row per (group, epoch) instead, when
-  --text-group-keys is also given (stream_text_drift_grouped vs
-  frozen PER-GROUP text profiles — the reference's per-provider
-  semantic loop; unknown-group rows collapse into a NULL-keyed
-  ``gated_reason='unknown_group'`` row, and alert cooldowns key on
-  the group-suffixed column so groups throttle independently)
+  --text-topic-column — the semantic half of the reference's detector
+  registry), or ``text_metrics_grouped/`` one row per (group, epoch)
+  with --text-group-keys (the reference's per-provider semantic loop)
+
+Every family is one stream over its profile's cells: the group keys
+ride in the frozen profile, and a keyed sink collapses rows of
+unprofiled groups into a NULL-keyed ``gated_reason='unknown_group'``
+row; alert cooldowns key on the group-suffixed column so groups
+throttle independently.  Every ``--*profile-path`` has the same
+load-or-freeze contract (``_frozen_profile``).
 
 Prints one JSON summary line in AvailableNow mode.
 
-Measured drain throughput (tools/stream_bench.py, sf0.1 = 600k clips,
-local[32], 16 micro-batches): distribution drift 26.1k rows/sec (p50
-trigger 1.2 s), fused 4-column drift 21.0k rows/sec = 84k
-column-rows/sec (1.23x one stream's wall for four features),
-embedding drift 20.2k rows/sec (p50 1.8 s), full
-8-check validation 9.4k clips/sec (static sides frozen + persisted at
-stream start — the transcripts projection and a 16-byte/row reference
-hash frame — so triggers stop re-hashing every reference payload),
-bloom payload dedup 19.3k rows/sec with a
-constant 123 MB state footprint.  Full table in BENCH/BASELINE.md.
+Throughput of these streams on the benchmark host, measured end to end
+by ``perfbench/`` (the ``stream_monitor`` workload), is recorded in
+BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -104,6 +99,60 @@ def _load(spark, spec: str):
     if spec.startswith("table:"):
         return spark.read.table(spec[len("table:"):])
     return spark.read.parquet(spec)
+
+
+def _keys(spec: str | None) -> list[str]:
+    return spec.split(",") if spec else []
+
+
+def _frozen_profile(label: str, path: str | None, stored_vs_requested, build):
+    """The load-or-freeze contract of every profile path: a stored
+    profile at ``path`` IS the monitored contract, so it is loaded and
+    every mismatch with what this run asked for
+    (``stored_vs_requested(profile)``: name -> (stored, requested))
+    is rejected — silently monitoring something other than the printed
+    summary reports is worse than failing.  Otherwise the profile is
+    built and, with a path, saved there."""
+    from llm_drift_detector_spark.streaming import load_profile, save_profile
+
+    if path and os.path.exists(path):
+        profile = load_profile(path)
+        mismatches = [
+            f"{name}: stored={stored!r} requested={req!r}"
+            for name, (stored, req) in stored_vs_requested(profile).items()
+            if stored != req
+        ]
+        if mismatches:
+            raise SystemExit(
+                f"stored {label}profile at {path} does not match this run: "
+                f"{'; '.join(mismatches)} — delete the file to re-freeze, or "
+                "rerun with the stored settings"
+            )
+        return profile
+    profile = build()
+    if path:
+        save_profile(profile, path)
+    return profile
+
+
+def _sink_summary(spark, path: str, prefix: str, keys: list[str]) -> dict:
+    """``<prefix>epochs`` and the flagged rows of one metrics sink:
+    ``<prefix>drift_detected`` (key values + epoch) for keyed or
+    multi-column sinks, else ``<prefix>drift_detected_epochs``."""
+    try:
+        rows = sorted(spark.read.parquet(path).collect(), key=lambda r: r.epoch)
+    except Exception:
+        rows = []
+    flagged = [
+        {**{k: r[k] for k in keys}, "epoch": int(r.epoch)}
+        for r in rows
+        if r.drift_detected
+    ]
+    if keys:
+        detected = {f"{prefix}drift_detected": flagged}
+    else:
+        detected = {f"{prefix}drift_detected_epochs": [f["epoch"] for f in flagged]}
+    return {f"{prefix}epochs": len({int(r.epoch) for r in rows}), **detected}
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -216,11 +265,13 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from llm_drift_detector_spark.streaming import (
-        load_profile,
+        embedding_reference_profile,
         reference_profile,
-        save_profile,
         stream_drift,
+        stream_embedding_drift,
+        stream_text_drift,
         stream_validate,
+        text_reference_profile,
     )
     from llm_drift_detector_spark.streaming.drift_stream import (
         _reference_rows,
@@ -236,157 +287,74 @@ def main(argv: list[str] | None = None) -> int:
     # the frozen profile: ONE batch job over the reference window,
     # closed over every micro-batch after that.  A column list selects
     # the fused multi-column shape, group keys the per-group one.
-    group_keys = args.group_keys.split(",") if args.group_keys else []
+    group_keys = _keys(args.group_keys)
     drift_cols = _split_columns(args.drift_columns) if args.drift_columns else None
     drift_spec = drift_cols or args.drift_column
-    if args.profile_path and os.path.exists(args.profile_path):
-        profile = load_profile(args.profile_path)
-        # the stored profile IS the monitored contract — reject every
-        # mismatch with what this run asked for (stream_drift monitors
-        # the stored columns; silently monitoring a different column
-        # than the printed summary reports is worse than failing)
-        mismatches = [
-            f"{name}: stored={stored!r} requested={req!r}"
-            for name, stored, req in (
-                ("group keys", profile.get("keys") or [], group_keys),
-                (
-                    "drift column",
-                    profile.get("columns", profile.get("column")),
-                    drift_spec,
-                ),
-                ("nbins", profile.get("nbins"), args.nbins),
-                ("psi_nbins", profile.get("psi_nbins"), args.psi_nbins),
-            )
-            if stored != req
-        ]
-        if mismatches:
-            raise SystemExit(
-                f"stored profile at {args.profile_path} does not match "
-                f"this run: {'; '.join(mismatches)} — delete the file to "
-                "re-freeze, or rerun with the stored settings"
-            )
-    else:
-        profile = reference_profile(
+    profile = _frozen_profile(
+        "", args.profile_path,
+        lambda p: {
+            "group keys": (p.get("keys") or [], group_keys),
+            "drift column": (p.get("columns", p.get("column")), drift_spec),
+            "nbins": (p.get("nbins"), args.nbins),
+            "psi_nbins": (p.get("psi_nbins"), args.psi_nbins),
+        },
+        lambda: reference_profile(
             reference, drift_spec, nbins=args.nbins,
             psi_nbins=args.psi_nbins, keys=group_keys,
-        )
-        if args.profile_path:
-            save_profile(profile, args.profile_path)
+        ),
+    )
 
-    # optional third family: frozen-centroid embedding drift
-    emb_profile = None
-    emb_keys = None
-    emb_schema = None
+    # optional families: frozen-centroid embedding drift, and
+    # frozen-profile text drift (lexical + perplexity + optional topics —
+    # the reference's semantic detectors).  Each is (name, stream,
+    # profile, watched dir, read schema); keys ride in the profile.
+    families = []
     if args.embedding_column:
-        from llm_drift_detector_spark.streaming import (
-            embedding_reference_profile,
-            embedding_reference_profile_grouped,
-        )
-
-        emb_keys = (
-            args.embedding_group_keys.split(",")
-            if args.embedding_group_keys
-            else None
-        )
+        emb_keys = _keys(args.embedding_group_keys)
         emb_ref = (
             _load(spark, args.embedding_reference)
             if args.embedding_reference
             else transcripts
         )
-        emb_schema = emb_ref.schema
-        if args.embedding_profile_path and os.path.exists(
-            args.embedding_profile_path
-        ):
-            emb_profile = load_profile(args.embedding_profile_path)
-            emb_mismatches = [
-                f"{name}: stored={stored!r} requested={req!r}"
-                for name, stored, req in (
-                    (
-                        "kind",
-                        emb_profile.get("kind"),
-                        "embedding_grouped" if emb_keys else "embedding",
-                    ),
-                    ("column", emb_profile.get("column"), args.embedding_column),
-                    ("keys", emb_profile.get("keys"), emb_keys),
-                )
-                if stored != req
-            ]
-            if emb_mismatches:
-                raise SystemExit(
-                    f"stored embedding profile at "
-                    f"{args.embedding_profile_path} does not match this "
-                    f"run: {'; '.join(emb_mismatches)}"
-                )
-        else:
-            if emb_keys:
-                emb_profile = embedding_reference_profile_grouped(
-                    emb_ref, emb_keys, args.embedding_column
-                )
-            else:
-                emb_profile = embedding_reference_profile(
-                    emb_ref, args.embedding_column
-                )
-            if args.embedding_profile_path:
-                save_profile(emb_profile, args.embedding_profile_path)
-
-    # optional fourth family: frozen-profile text drift (lexical +
-    # perplexity + optional topics — the reference's semantic detectors)
-    text_profile = None
-    text_keys = None
-    text_schema = None
+        families.append((
+            "embedding",
+            stream_embedding_drift,
+            _frozen_profile(
+                "embedding ", args.embedding_profile_path,
+                lambda p: {
+                    "kind": (p.get("kind"), "embedding" + "_grouped" * bool(emb_keys)),
+                    "column": (p.get("column"), args.embedding_column),
+                    "keys": (p.get("keys") or [], emb_keys),
+                },
+                lambda: embedding_reference_profile(
+                    emb_ref, args.embedding_column, keys=emb_keys
+                ),
+            ),
+            args.embedding_dir, emb_ref.schema,
+        ))
     if args.text_column:
-        from llm_drift_detector_spark.streaming import (
-            text_reference_profile,
-            text_reference_profile_grouped,
-        )
-
-        text_keys = (
-            args.text_group_keys.split(",") if args.text_group_keys else None
-        )
+        text_keys = _keys(args.text_group_keys)
         text_ref = (
-            _load(spark, args.text_reference)
-            if args.text_reference
-            else transcripts
+            _load(spark, args.text_reference) if args.text_reference else transcripts
         )
-        text_schema = text_ref.schema
-        if args.text_profile_path and os.path.exists(args.text_profile_path):
-            text_profile = load_profile(args.text_profile_path)
-            text_mismatches = [
-                f"{name}: stored={stored!r} requested={req!r}"
-                for name, stored, req in (
-                    (
-                        "kind",
-                        text_profile.get("kind"),
-                        "text_grouped" if text_keys else "text",
-                    ),
-                    ("column", text_profile.get("column"), args.text_column),
-                    ("keys", text_profile.get("keys"), text_keys),
-                    (
-                        "topic_column",
-                        text_profile.get("topic_column"),
-                        args.text_topic_column,
-                    ),
-                )
-                if stored != req
-            ]
-            if text_mismatches:
-                raise SystemExit(
-                    f"stored text profile at {args.text_profile_path} does "
-                    f"not match this run: {'; '.join(text_mismatches)}"
-                )
-        else:
-            if text_keys:
-                text_profile = text_reference_profile_grouped(
-                    text_ref, text_keys, args.text_column,
-                    topic_column=args.text_topic_column,
-                )
-            else:
-                text_profile = text_reference_profile(
+        families.append((
+            "text",
+            stream_text_drift,
+            _frozen_profile(
+                "text ", args.text_profile_path,
+                lambda p: {
+                    "kind": (p.get("kind"), "text" + "_grouped" * bool(text_keys)),
+                    "column": (p.get("column"), args.text_column),
+                    "keys": (p.get("keys") or [], text_keys),
+                    "topic_column": (p.get("topic_column"), args.text_topic_column),
+                },
+                lambda: text_reference_profile(
                     text_ref, args.text_column,
-                    topic_column=args.text_topic_column,
-                )
-            if args.text_profile_path:
-                save_profile(text_profile, args.text_profile_path)
+                    topic_column=args.text_topic_column, keys=text_keys,
+                ),
+            ),
+            args.text_dir, text_ref.schema,
+        ))
 
     available_now = not args.continuous
     stream_validate(
@@ -409,37 +377,13 @@ def main(argv: list[str] | None = None) -> int:
         available_now=available_now,
         max_files_per_trigger=args.max_files_per_trigger,
     )
-    if emb_profile is not None:
-        from llm_drift_detector_spark.streaming import (
-            stream_embedding_drift,
-            stream_embedding_drift_grouped,
-        )
-
-        emb_fn = (
-            stream_embedding_drift_grouped if emb_keys else stream_embedding_drift
-        )
-        emb_fn(
+    for _name, stream, fprofile, src_dir, schema in families:
+        stream(
             spark,
-            args.embedding_dir or args.clips_dir,
-            emb_profile,
+            src_dir or args.clips_dir,
+            fprofile,
             args.out,
-            schema=emb_schema,
-            run_id=args.run_id,
-            available_now=available_now,
-            max_files_per_trigger=args.max_files_per_trigger,
-        )
-    if text_profile is not None:
-        from llm_drift_detector_spark.streaming import (
-            stream_text_drift,
-            stream_text_drift_grouped,
-        )
-
-        (stream_text_drift_grouped if text_keys else stream_text_drift)(
-            spark,
-            args.text_dir or args.clips_dir,
-            text_profile,
-            args.out,
-            schema=text_schema,
+            schema=schema,
             run_id=args.run_id,
             available_now=available_now,
             max_files_per_trigger=args.max_files_per_trigger,
@@ -455,76 +399,23 @@ def main(argv: list[str] | None = None) -> int:
         "drift_column": drift_spec,
     }
     vio_path = os.path.join(args.out, "violations_stream")
-    met_path = os.path.join(args.out, _sink(keys, multi, windowed=False)[0])
-    # both sinks may legitimately not exist after a zero-batch drain
-    # (no new files since the last run) — report zeros, not a traceback
+    # the sinks may legitimately not exist after a zero-batch drain (no
+    # new files since the last run) — report zeros, not a traceback
     try:
         summary["violation_rows"] = spark.read.parquet(vio_path).count()
     except Exception:
         summary["violation_rows"] = 0
-    try:
-        rows = sorted(
-            spark.read.parquet(met_path).collect(), key=lambda r: r.epoch
-        )
-    except Exception:
-        rows = []
-    summary["epochs"] = len({int(r.epoch) for r in rows})
-    flagged = [
-        {
-            **{k: r[k] for k in keys},
-            **({"column": r.column} if multi else {}),
-            "epoch": int(r.epoch),
-        }
-        for r in rows
-        if r.drift_detected
-    ]
-    if keys or multi:
-        summary["drift_detected"] = flagged
-    else:
-        summary["drift_detected_epochs"] = [f["epoch"] for f in flagged]
-    if emb_profile is not None:
-        emb_path = os.path.join(
-            args.out,
-            "embedding_metrics_grouped" if emb_keys else "embedding_metrics",
-        )
-        try:
-            erows = sorted(
-                spark.read.parquet(emb_path).collect(), key=lambda r: r.epoch
-            )
-        except Exception:
-            erows = []
-        summary["embedding_epochs"] = len({int(r.epoch) for r in erows})
-        if emb_keys:
-            summary["embedding_drift_detected"] = [
-                {**{k: r[k] for k in emb_keys}, "epoch": int(r.epoch)}
-                for r in erows
-                if r.drift_detected
-            ]
-        else:
-            summary["embedding_drift_detected_epochs"] = [
-                int(r.epoch) for r in erows if r.drift_detected
-            ]
-    trows = []
-    if text_profile is not None:
-        text_sink = "text_metrics_grouped" if text_keys else "text_metrics"
-        try:
-            trows = sorted(
-                spark.read.parquet(os.path.join(args.out, text_sink)).collect(),
-                key=lambda r: r.epoch,
-            )
-        except Exception:
-            trows = []
-        summary["text_epochs"] = len({int(r.epoch) for r in trows})
-        if text_keys:
-            summary["text_drift_detected"] = [
-                {**{k: r[k] for k in text_keys}, "epoch": int(r.epoch)}
-                for r in trows
-                if r.drift_detected
-            ]
-        else:
-            summary["text_drift_detected_epochs"] = [
-                int(r.epoch) for r in trows if r.drift_detected
-            ]
+    summary.update(_sink_summary(
+        spark, os.path.join(args.out, _sink(keys, multi, windowed=False)[0]),
+        "", keys + ["column"] * multi,
+    ))
+    for name, _stream, fprofile, _src, _schema in families:
+        fkeys = list(fprofile.get("keys") or [])
+        summary.update(_sink_summary(
+            spark,
+            os.path.join(args.out, f"{name}_metrics" + "_grouped" * bool(fkeys)),
+            f"{name}_", fkeys,
+        ))
     # ---- C19 alert derivation over the drained epochs -----------------
     #
     # Shared engine (monitoring/derive.py): discovers the metric sinks,

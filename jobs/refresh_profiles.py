@@ -110,10 +110,8 @@ def main(argv: list[str] | None = None) -> int:
         load_profile,
         save_profile,
         update_embedding_reference_profile,
-        update_embedding_reference_profile_grouped,
         update_reference_profile,
         update_text_reference_profile,
-        update_text_reference_profile_grouped,
     )
 
     spark = SparkSession.builder.appName("refresh-profiles").getOrCreate()
@@ -121,30 +119,23 @@ def main(argv: list[str] | None = None) -> int:
     kind = _detect_kind(profile)
     new_data = _load_df(spark, args.new_data)
 
-    distribution = lambda: update_reference_profile(  # noqa: E731
-        profile, new_data, rebin_rel_threshold=args.rebin_threshold
-    )
+    # one entry per family: each update reads the shape (keys, columns)
+    # from the profile itself
     dispatch = {
-        "distribution": distribution,
-        "distribution_grouped": distribution,
-        "distribution_multi": distribution,
-        "distribution_multi_grouped": distribution,
+        "distribution": lambda: update_reference_profile(
+            profile, new_data, rebin_rel_threshold=args.rebin_threshold
+        ),
         "embedding": lambda: update_embedding_reference_profile(profile, new_data),
-        "embedding_grouped": lambda: update_embedding_reference_profile_grouped(
-            profile, new_data
-        ),
         "text": lambda: update_text_reference_profile(profile, new_data),
-        "text_grouped": lambda: update_text_reference_profile_grouped(
-            profile, new_data
-        ),
     }
-    if kind not in dispatch:
+    family = kind.split("_")[0]
+    if family not in dispatch:
         raise SystemExit(
             f"profile kind {kind!r} has no incremental update — re-freeze "
             "with its reference_profile builder instead"
         )
     n_before = _n_total(kind, profile)
-    merged = dispatch[kind]()
+    merged = dispatch[family]()
     n_after = _n_total(kind, merged)
 
     tmp = args.profile_path + ".tmp"

@@ -332,8 +332,13 @@ def _decode_and_snr_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Reco
 
 def _deep_validate_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """Deep mode: decode BOTH payloads for every row — flac dur check +
-    SNR everywhere.  pcm/opus dur is still caught natively upstream."""
+    SNR everywhere.  pcm/opus dur is still caught natively upstream.
+    One verdict per clips row (``__row``, see ``_ROW_ID``): the dur
+    verdict depends on the clips row alone, and SNR fires iff some
+    reference row of the id violates."""
+    done: set[int] = set()
     for b in batches:
+        row_ids = b.column("__row").to_pylist()
         ids = b.column("clip_id")
         payloads = b.column("bytes")
         srs = b.column("sr_hz")
@@ -343,6 +348,8 @@ def _deep_validate_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Recor
         ref_codecs = b.column("ref_codec").to_pylist()
         rows: list[tuple[str, str, str]] = []
         for i in range(b.num_rows):
+            if row_ids[i] in done:
+                continue
             codec = codecs_[i]
             pcm = _decode_np(payloads[i].as_py(), codec)
             if pcm is None:
@@ -350,6 +357,7 @@ def _deep_validate_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Recor
                     rows.append(
                         (ids[i].as_py(), "dur_ms_mismatch", json.dumps({"error": "decode_failed"}))
                     )
+                    done.add(row_ids[i])
                 continue
             sr = srs[i].as_py()
             implied = len(pcm) * 1000.0 / sr if sr else float("inf")
@@ -362,6 +370,7 @@ def _deep_validate_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Recor
                             json.dumps({"dur_ms": durs[i].as_py(), "implied_ms": round(implied, 3)}),
                         )
                     )
+                    done.add(row_ids[i])
                 continue
             if not refs[i].is_valid:
                 continue
@@ -369,6 +378,7 @@ def _deep_validate_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Recor
             violation = _snr_violation(ids[i].as_py(), ref_pcm, pcm)
             if violation is not None:
                 rows.append(violation)
+                done.add(row_ids[i])
         yield from _emit(rows)
 
 
@@ -423,6 +433,18 @@ def audio_invariant_violations(
     differing-candidate verdict rows pulled to the driver; past it the
     plan falls back to the fully-lazy round-5 shape (correct at any
     violation rate, extra payload scans).
+
+    Eager contract (``hash_shortcut``): this call RUNS Spark jobs before
+    it returns — the fused pass is collected (at most
+    ``max_collected_violations + 1`` rows) and, in the lazy fallback,
+    the differing ids (at most ``max_fetch_ids + 1``).  The native dur
+    verdicts and the SNR candidate ids are frozen into the returned
+    frame as local data: executing it re-runs only the decode stage (the
+    flac / non-canonical wav dur checks and the SNR of the frozen
+    candidates), so inputs changed after the call reach neither the
+    native verdicts nor the candidate set.  Build the frame when its
+    inputs are final and, for many slices, one slice at a time.
+    ``snr_mode="deep"`` runs no job here and returns a lazy frame.
     """
     cur = clips.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec")
 
@@ -474,8 +496,12 @@ def audio_invariant_violations(
         # whole per-partition payload side as an in-memory hash table —
         # at low partition counts that is GBs in one map (guide §3.1's
         # stated OOM risk); SMJ spills gracefully.
-        pairs = cur.where(F.col("codec").isin(list(CODEC_WHITELIST))).join(
-            ref_payloads.hint("merge"), "clip_id", "left"
+        # ``__row`` is taken before the join: k reference rows of one id
+        # join k copies of its clips row, and the kernel emits once per row
+        pairs = (
+            cur.where(F.col("codec").isin(list(CODEC_WHITELIST)))
+            .withColumn("__row", _ROW_ID())
+            .join(ref_payloads.hint("merge"), "clip_id", "left")
         )
         if salted:
             # see the `salted` docstring note: the equi-join's output is

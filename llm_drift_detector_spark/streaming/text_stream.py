@@ -3,31 +3,36 @@ topic (C12) per micro-batch vs a FROZEN text profile.
 
 Completes the reference's detector registry in continuous mode
 (``detectors/__init__.py:58-86`` runs distribution + embedding +
-semantic per cadence): ``drift_stream`` covers distributions,
-``embedding_stream`` covers C6-C9, this module covers the token-based
-families of ``detectors/semantic.py``:
+semantic per cadence, once per provider): ``drift_stream`` covers
+distributions, ``embedding_stream`` covers C6-C9, this module covers the
+token-based families of ``detectors/semantic.py``.  "Global" and "per
+provider" are one computation over CELLS (:mod:`.cells`): a cell is one
+group-key tuple, a global profile is the zero-key case.  One function per
+operation:
 
-1. :func:`text_reference_profile` — one-off batch jobs over the
-   reference window freeze (a) the vocabulary term counts (A8 — also
-   the Laplace unigram LM of C11), (b) the C14 style feature row,
-   (c) the reference window's own mean perplexity under its own LM
-   (C11's baseline, ``semantic.py:140-148``), and optionally (d) the
-   topic distribution (C12, argmax-dim stand-in at the documented
-   model seam).  Driver state is O(|window vocab| + #topics) — bounded
-   by drift-WINDOW vocabulary under reference semantics
-   (``default_config.py:104``), same driver-memory contract as the
-   grouped distribution profiles.
-2. :func:`stream_text_drift` — per micro-batch, ONE fused Spark action
-   computes every lexical/perplexity input: the frozen vocab frame
-   full-outer-joins the batch token counts (C13's jaccard + inside-
-   the-log JS, side-total normalized, ``semantic.py:396-407``,
-   disjoint-vocab bare-jaccard rule included), batch token/sentence
-   style stats (C14), and per-doc perplexity under the FROZEN LM
-   (unknown tokens at the Laplace floor).  The four 1-row subframes
-   crossJoin into a single collected row — four scans of a micro-batch-
-   sized input, zero per-row Python.  When topics are frozen, a second
-   O(#topics) aggregate feeds C12's JS driver-side.  Scores and
-   verdicts mirror the batch detectors exactly:
+1. :func:`text_reference_profile` ``(ref, column, topic_column=None,
+   keys=())`` freezes, per cell, (a) the vocabulary term counts (A8 —
+   also the Laplace unigram LM of C11), (b) the C14 style row (with the
+   sentence count that makes it mergeable), (c) the window's own mean
+   perplexity under its own LM (C11's baseline, ``semantic.py:140-148``)
+   and optionally (d) the topic distribution (C12, argmax-dim stand-in
+   at the documented model seam).  Two actions: one window pass (doc and
+   sentence counts, the vocabulary as a per-group token->count map, the
+   topic counts) and one perplexity pass.  Driver state is O(Σ per-group
+   |window vocab| + #groups x #topics) — bounded by drift-WINDOW
+   vocabulary under reference semantics (``default_config.py:104``).
+2. :func:`update_text_reference_profile` folds new data into every cell
+   with the same two passes (the perplexity pass under the MERGED LM);
+   building a profile is folding the window into empty cells.
+3. :func:`stream_text_drift` — per micro-batch ONE aggregate tree for
+   every cell: the frozen vocab frame full-outer-joins the batch token
+   counts on (group, token) (C13's jaccard + inside-the-log JS,
+   side-total normalized, ``semantic.py:396-407``, disjoint-vocab
+   bare-jaccard rule included), batch token/sentence style stats (C14),
+   per-doc perplexity under each group's FROZEN LM (unknown tokens at
+   the Laplace floor) and the batch topic counts, joined on the keys and
+   collected in a single action — zero per-row Python, never a job per
+   group.  O(cells) driver arithmetic then mirrors the batch detectors:
 
    - ``lexical_score``  = 0.6*vocab_diff + 0.4*style_diff, drift iff
      > LEXICAL_THRESHOLD (``semantic.py:312-315``)
@@ -36,28 +41,29 @@ families of ``detectors/semantic.py``:
    - ``topic_score``    = min(js/0.4, 1), drift iff js > 0.4
      (``semantic.py:244-271``)
 
-Same sink contract as the other streaming families: one metrics row
-per epoch at ``<out>/text_metrics``, written by OVERWRITING the
-``epoch=<k>`` partition (idempotent foreachBatch replays), Spark's
-streaming checkpoint giving each input file exactly-once processing.
+A *doc* is a row whose text column is non-NULL; the counts, the style
+row, the perplexities and the topic counts all range over docs.  Rows
+with any NULL key are never profiled; the stream and the update count
+them with the rows of unprofiled groups.  The global builder refuses to
+freeze a window of fewer than MIN_SAMPLES docs (a frozen baseline below
+the detector gate would flag nothing forever); a keyed one refuses only
+a window without docs, since gating is per (group, batch).
+
+Sinks: ``text_metrics`` (one row per epoch) and ``text_metrics_grouped``
+(the keyed row rules of :func:`.cells.epoch_rows`), each epoch's
+partition OVERWRITTEN so ``foreachBatch`` replays are idempotent.
 """
 
 from __future__ import annotations
 
 import math
-import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import LEXICAL_THRESHOLD, MIN_SAMPLES
-from ..drift.lexical import style_features_frame
-from ..drift.semantic import (
-    PERPLEXITY_THRESHOLD,
-    TOPIC_THRESHOLD,
-    assign_topics,
-    unigram_perplexities,
-)
+from ..drift.semantic import PERPLEXITY_THRESHOLD, TOPIC_THRESHOLD, assign_topics
+from .cells import cells, epoch_rows, group_of, join_on, keyed, run_stream, with_cells
 
 TEXT_METRICS_SCHEMA = (
     "run_id string, epoch bigint, n bigint, jaccard double, js double, "
@@ -68,87 +74,244 @@ TEXT_METRICS_SCHEMA = (
     "gated boolean"
 )
 _SINK_ROW_SCHEMA = TEXT_METRICS_SCHEMA.replace("epoch bigint, ", "")
+_ZERO = (
+    0.0, 0.0, 0.0, 0.0, 0.0, False, 0.0, 0.0, 0.0, False, None, None, None, False,
+)
 
 
-def _tokens(df: DataFrame, col: str) -> DataFrame:
-    """(_doc, token): reference tokenization (lower().split(), empties
-    dropped) with the doc id assigned BEFORE the explode."""
+# ---- the per-group subframes ----------------------------------------------
+
+
+def _docs(df: DataFrame, keys: list[str], column: str, topic_col) -> DataFrame:
+    """Docs (non-null text rows): string keys + text (+ topic) column."""
+    return keyed(
+        df.where(F.col(column).isNotNull()), keys, column,
+        *([topic_col] if topic_col else []),
+    )
+
+
+def _tokens(docs: DataFrame, keys: list[str], column: str) -> DataFrame:
+    """(keys..., _doc, token): reference tokenization (lower().split(),
+    empties dropped) with the doc id assigned BEFORE the explode."""
     return (
-        df.where(F.col(col).isNotNull())
-        .withColumn("_doc", F.monotonically_increasing_id())
+        docs.withColumn("_doc", F.monotonically_increasing_id())
         .select(
-            "_doc", F.explode(F.split(F.lower(F.col(col)), r"\s+")).alias("token")
+            *keys, "_doc",
+            F.explode(F.split(F.lower(F.col(column)), r"\s+")).alias("token"),
         )
         .where(F.col("token") != "")
     )
 
 
-def text_reference_profile(
-    ref: DataFrame, column: str, topic_column: str | None = None
-) -> dict:
-    """Frozen text profile: vocab counts + style row + own-LM mean
-    perplexity (+ topic distribution when ``topic_column`` is given).
+def _doc_stats(docs: DataFrame, keys: list[str], column: str, topic_col) -> DataFrame:
+    """Per group: ``n`` docs, ``n_sent`` / ``len_sum`` (sentence count and
+    summed sentence token lengths, C14) and, with a topic column, the
+    ``topics`` map topic -> doc count (C12)."""
+    out = join_on(
+        docs.groupBy(*keys).agg(F.count("*").alias("n")),
+        docs.select(*keys, F.explode(F.split(F.col(column), r"\.")).alias("s"))
+        .where(F.trim("s") != "")
+        .groupBy(*keys)
+        .agg(
+            F.count("*").alias("n_sent"),
+            F.sum(
+                F.size(F.filter(F.split(F.col("s"), r"\s+"), lambda x: x != ""))
+            ).alias("len_sum"),
+        ),
+        keys,
+    )
+    if topic_col:
+        topics = (
+            assign_topics(
+                docs.where(F.col(topic_col).isNotNull() & (F.size(F.col(topic_col)) > 0)),
+                topic_col,
+            )
+            .groupBy(*keys, "topic")
+            .agg(F.count("*").alias("cnt"))
+            .groupBy(*keys)
+            .agg(F.map_from_entries(F.collect_list(F.struct("topic", "cnt"))).alias("topics"))
+        )
+        out = join_on(out, topics, keys)
+    return out
 
-    Raises when the reference window has fewer than MIN_SAMPLES non-null
-    docs — a frozen monitor baseline below the detector gate would flag
-    nothing forever, which is worse than failing at freeze time.
+
+def _lm_frame(spark: SparkSession, keys: list[str], vocabs: dict) -> DataFrame:
+    """Tiny (Σ per-group vocab) frame ``(keys..., token, cr, __rt)``:
+    every group's term counts and its token total."""
+    rows = [
+        (*g, t, c, float(max(sum(v.values()), 1)))
+        for g, v in vocabs.items()
+        for t, c in v.items()
+    ]
+    ddl = ", ".join(f"{k} string" for k in keys) + (
+        (", " if keys else "") + "token string, cr bigint, __rt double"
+    )
+    return spark.createDataFrame(rows, ddl)
+
+
+def _denom(vocab: dict) -> float:
+    """Laplace denominator T + |V| of a unigram LM."""
+    return float(sum(vocab.values()) + max(len(vocab), 1))
+
+
+def _ppl_stats(toks: DataFrame, keys: list[str], lm: DataFrame) -> DataFrame:
+    """Per group: ``ippl`` = mean over docs of exp(-avg log(cr + 1)) under
+    the group's LM, and ``n_ppl`` scored (token-bearing) docs.  A doc's
+    perplexity is exp(-avg log((cr + 1) / denom)) = denom x that term,
+    so the mean perplexity is ``_denom(vocab) * ippl`` (unknown tokens
+    at the Laplace floor)."""
+    return (
+        toks.join(F.broadcast(lm.select(*keys, "token", "cr")), [*keys, "token"], "left")
+        .groupBy(*keys, "_doc")
+        .agg(F.exp(-F.avg(F.log(F.coalesce(F.col("cr"), F.lit(0)) + 1.0))).alias("ippl"))
+        .groupBy(*keys)
+        .agg(F.avg("ippl").alias("ippl"), F.count("*").alias("n_ppl"))
+    )
+
+
+# ---- profile and update: fold a window into cells ---------------------------
+
+
+def _window(docs: DataFrame, keys: list[str], column: str, topic_col) -> dict:
+    """``{group: {n, n_sent, len_sum, vocab, topics}}`` of a window in ONE
+    action (the vocabulary rides as a per-group token -> count map)."""
+    vocab = (
+        _tokens(docs, keys, column)
+        .groupBy(*keys, "token")
+        .agg(F.count("*").alias("cnt"))
+        .groupBy(*keys)
+        .agg(F.map_from_entries(F.collect_list(F.struct("token", "cnt"))).alias("vocab"))
+    )
+    out = {}
+    for r in join_on(_doc_stats(docs, keys, column, topic_col), vocab, keys).collect():
+        d = r.asDict()
+        out[group_of(r, keys)] = {
+            "n": int(d["n"]),
+            "n_sent": int(d["n_sent"] or 0),
+            "len_sum": int(d["len_sum"] or 0),
+            "vocab": d["vocab"] or {},
+            "topics": d.get("topics") or {},
+        }
+    return out
+
+
+def _window_ppl(docs: DataFrame, keys: list[str], column: str, vocabs: dict) -> dict:
+    """``{group: (ippl, n_ppl)}`` of the window's docs under ``vocabs``."""
+    lm = _lm_frame(docs.sparkSession, keys, vocabs)
+    return {
+        group_of(r, keys): (float(r.ippl or 0.0), int(r.n_ppl))
+        for r in _ppl_stats(_tokens(docs, keys, column), keys, lm).collect()
+    }
+
+
+def _fold(p: dict, w: dict, ppl: tuple, vocab: dict, topic_col) -> dict:
+    """Cell ``p`` with window ``w`` folded in under the merged ``vocab``.
+
+    Vocab counts (= the LM), the style row (token stats from the merged
+    vocab, avg_sentence_len from the stored (avg, ``n_sentences``) pair)
+    and the topic distribution (un-normalized via ``topics_n``) merge
+    EXACTLY.  The mean perplexity mixes the stored mean with the window's
+    docs scored under the merged LM, weighted by SCORED doc counts (a
+    tokenless doc enters neither side's average)."""
+    total = sum(vocab.values())
+    tc = max(total, 1)
+    n_sent = p["n_sentences"] + w["n_sent"]
+    old_len = p["style"]["avg_sentence_len"] * p["n_sentences"]
+    ippl, n_ppl_new = ppl
+    n_ppl_old = int(p.get("n_ppl_docs", p["n"]))
+    n_ppl = n_ppl_old + n_ppl_new
+    mean_ppl = (
+        (n_ppl_old * p["ref_mean_perplexity"] + n_ppl_new * _denom(vocab) * ippl) / n_ppl
+        if n_ppl
+        else p["ref_mean_perplexity"]
+    )
+    out = {
+        **p,
+        "n": int(p["n"] + w["n"]),
+        "vocab": vocab,
+        "total_tokens": int(total),
+        "style": {
+            "avg_sentence_len": float((old_len + w["len_sum"]) / n_sent if n_sent else 0.0),
+            "avg_word_len": float(sum(len(t) * c for t, c in vocab.items()) / tc),
+            "token_count": float(total),
+            "unique_token_count": float(len(vocab)),
+            "diversity": float(len(vocab) / tc),
+        },
+        "n_sentences": int(n_sent),
+        "ref_mean_perplexity": float(mean_ppl),
+        "n_ppl_docs": int(n_ppl),
+    }
+    if topic_col:
+        old_n = p.get("topics_n", 0)
+        acc = {k: q * old_n for k, q in p.get("topics", {}).items()}
+        for t, c in w["topics"].items():
+            acc[str(t)] = acc.get(str(t), 0.0) + c
+        tot = sum(acc.values()) or 1.0
+        out["topics"] = {k: v / tot for k, v in acc.items()}
+        out["topics_n"] = int(old_n + sum(w["topics"].values()))
+    return out
+
+
+_EMPTY_CELL = {
+    "n": 0, "vocab": {}, "total_tokens": 0, "style": {"avg_sentence_len": 0.0},
+    "n_sentences": 0, "ref_mean_perplexity": 0.0, "n_ppl_docs": 0,
+}
+
+
+def text_reference_profile(
+    ref: DataFrame,
+    column: str,
+    topic_column: str | None = None,
+    keys: list[str] | tuple = (),
+) -> dict:
+    """Frozen text profile of every cell: vocab counts + style row +
+    own-LM mean perplexity (+ topic distribution when ``topic_column``
+    is given).  ``keys`` groups it per key tuple (the reference's
+    per-provider semantic loop); rows with any NULL key are not profiled.
+
+    Raises when a global window has fewer than MIN_SAMPLES docs — a
+    frozen monitor baseline below the detector gate would flag nothing
+    forever, which is worse than failing at freeze time — and when a
+    keyed window has no docs at all (a small group's baseline must not
+    block freezing every other group's).
     """
-    base = ref.where(F.col(column).isNotNull())
-    n = base.count()
-    if n < MIN_SAMPLES:
+    keys = list(keys)
+    docs = _docs(ref, keys, column, topic_column).dropna(subset=keys)
+    w = _window(docs, keys, column, topic_column)
+    n = sum(s["n"] for s in w.values())
+    if not keys and n < MIN_SAMPLES:
         raise ValueError(
             f"reference window has {n} non-null {column} docs "
             f"(< MIN_SAMPLES={MIN_SAMPLES}) — refusing to freeze a gated baseline"
         )
-    vocab_rows = (
-        _tokens(ref, column).groupBy("token").agg(F.count("*").alias("cnt")).collect()
-    )
-    vocab = {r.token: int(r.cnt) for r in vocab_rows}
-    style = style_features_frame(ref, column).collect()[0].asDict()
-    ppl_row = (
-        unigram_perplexities(ref, ref, column)
-        .agg(F.avg("perplexity").alias("m"), F.count("*").alias("c"))
-        .collect()[0]
-    )
-    mean_ppl = float(ppl_row.m or 0.0)
-    # docs with zero tokens never enter the perplexity average; the
-    # SCORED count is the correct mixing weight for incremental updates
-    n_ppl_docs = int(ppl_row.c)
-    n_sent = int(
-        ref.where(F.col(column).isNotNull())
-        .select(F.explode(F.split(F.col(column), r"\.")).alias("s"))
-        .where(F.trim("s") != "")
-        .count()
-    )
-    profile = {
-        "kind": "text",
-        "column": column,
-        "n": int(n),
-        "vocab": vocab,
-        "total_tokens": int(sum(vocab.values())),
-        "style": {k: float(v) for k, v in style.items()},
-        # sentence COUNT alongside the style row's avg: the pair makes
-        # avg_sentence_len exactly mergeable in the incremental update
-        "n_sentences": n_sent,
-        "ref_mean_perplexity": mean_ppl,
-        "n_ppl_docs": n_ppl_docs,
-    }
+    if not n:
+        raise ValueError(f"reference window has no non-null {column} docs")
+    ppl = _window_ppl(docs, keys, column, {g: s["vocab"] for g, s in w.items()})
+    empty = {**_EMPTY_CELL, **({"topics": {}, "topics_n": 0} if topic_column else {})}
+    header: dict = {"kind": "text" + "_grouped" * bool(keys), "column": column}
+    if keys:
+        header["keys"] = keys
     if topic_column is not None:
-        tdf = ref.where(
-            F.col(topic_column).isNotNull() & (F.size(F.col(topic_column)) > 0)
-        )
-        counts = (
-            assign_topics(tdf, topic_column)
-            .groupBy("topic")
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        )
-        tot = float(sum(r.cnt for r in counts)) or 1.0
-        profile["topic_column"] = topic_column
-        # JSON object keys are strings; topic ids stay ints in memory
-        profile["topics"] = {str(int(r.topic)): r.cnt / tot for r in counts}
-        profile["topics_n"] = int(tot if counts else 0)
-    return profile
+        header["topic_column"] = topic_column
+    return with_cells(header, {
+        g: _fold(empty, s, ppl.get(g, (0.0, 0)), s["vocab"], topic_column)
+        for g, s in w.items()
+    })
+
+
+def _lm_js(old: dict, old_total: int, merged: dict) -> float:
+    """Jensen-Shannon between two unigram distributions (old ⊆ merged
+    vocabulary) — O(|vocab|) driver math."""
+    ot, mt = max(old_total, 1), max(sum(merged.values()), 1)
+    js = 0.0
+    for t, mc in merged.items():
+        pr, pm = old.get(t, 0) / ot, mc / mt
+        m = (pr + pm) / 2
+        if pr > 0:
+            js += 0.5 * pr * math.log(pr / m + 1e-10)
+        if pm > 0:
+            js += 0.5 * pm * math.log(pm / m + 1e-10)
+    return js
 
 
 def update_text_reference_profile(
@@ -156,18 +319,14 @@ def update_text_reference_profile(
     new_data: DataFrame,
     lm_divergence_threshold: float = 0.1,
 ) -> dict:
-    """Incrementally fold ``new_data`` into a frozen text profile.
+    """Incrementally fold ``new_data`` into every cell of a frozen text
+    profile: the builder's window pass over the new docs, then
+    :func:`_fold` per cell.
 
     The mergeable components merge EXACTLY (test-asserted against a
-    from-scratch rebuild on the concatenated windows):
-
-    - vocab term counts — plain addition (this IS the C11 Laplace LM);
-    - style row — avg_word_len / token_count / unique_token_count /
-      diversity re-derived from the merged vocab; avg_sentence_len from
-      the stored (avg, ``n_sentences``) pair plus one sentence pass
-      over the new docs;
-    - topic distribution — probs un-normalized via ``topics_n``, new
-      counts added, renormalized.
+    from-scratch rebuild on the concatenated windows): vocab term counts
+    (this IS the C11 Laplace LM), the style row and the topic
+    distribution.
 
     ``ref_mean_perplexity`` is NOT exactly mergeable: each old doc's
     perplexity depends on every token's count in the window's OWN LM,
@@ -176,155 +335,54 @@ def update_text_reference_profile(
     The update therefore scores the NEW docs under the MERGED LM (one
     broadcast-join pass, the stream's frozen-LM formula) and mixes
     doc-count-weighted with the stored mean, and — mirroring the
-    distribution profile's ``needs_rebin`` contract — reports how far
-    the LM itself moved: ``ppl_lm_divergence`` (Jensen-Shannon between
-    the old and merged unigram distributions, O(|vocab|) driver math)
-    with ``needs_ppl_rescore=True`` above ``lm_divergence_threshold``,
+    distribution profile's ``needs_rebin`` contract — reports per cell
+    how far the LM itself moved: ``ppl_lm_divergence`` (Jensen-Shannon
+    between the old and merged unigram distributions) with
+    ``needs_ppl_rescore=True`` above ``lm_divergence_threshold``,
     telling the caller the stored component of the mean is stale and a
     full re-freeze is due at the next maintenance window.  When the new
     window matches the old distribution the divergence is ~0 and the
     mix converges to the true value (test-asserted).
 
-    Profiles frozen before this version lack ``n_sentences`` — the
-    update refuses them (re-freeze once with the current builder).
-    Returns a drop-in :func:`stream_text_drift` profile.
+    Keyed profiles: rows of groups with no frozen profile (or a NULL
+    key) are counted (``unknown_rows``), never folded — a new provider
+    is a re-freeze decision.  Profiles frozen before ``n_sentences`` was
+    stored are refused (re-freeze once).  Returns a drop-in
+    :func:`stream_text_drift` profile.
     """
-    if "n_sentences" not in profile:
+    old = cells(profile)
+    if any("n_sentences" not in p for p in old.values()):
         raise ValueError(
             "profile lacks n_sentences (frozen by an older builder) — "
             "re-freeze once with text_reference_profile to enable "
             "incremental updates"
         )
-    column = profile["column"]
-    topic_column = profile.get("topic_column")
-    base = new_data.where(F.col(column).isNotNull())
+    keys = list(profile.get("keys") or ())
+    column, topic_col = profile["column"], profile.get("topic_column")
+    docs = _docs(new_data, keys, column, topic_col)
+    w = _window(docs, keys, column, topic_col)
+    fold = {g: s for g, s in w.items() if g in old and s["n"]}
+    vocabs = {}
+    for g, s in fold.items():
+        vocabs[g] = dict(old[g]["vocab"])
+        for t, c in s["vocab"].items():
+            vocabs[g][t] = vocabs[g].get(t, 0) + c
+    ppl = _window_ppl(docs, keys, column, vocabs) if fold else {}
+    merged = {g: dict(p) for g, p in old.items()}
+    for g, s in fold.items():
+        js = _lm_js(old[g]["vocab"], old[g]["total_tokens"], vocabs[g])
+        merged[g] = {
+            **_fold(old[g], s, ppl.get(g, (0.0, 0)), vocabs[g], topic_col),
+            "ppl_lm_divergence": float(js),
+            "needs_ppl_rescore": bool(js > lm_divergence_threshold),
+        }
+    out = with_cells(profile, merged)
+    if keys:
+        out["unknown_rows"] = int(sum(s["n"] for g, s in w.items() if g not in old))
+    return out
 
-    new_vocab_rows = (
-        _tokens(new_data, column)
-        .groupBy("token")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    )
-    n_new = base.count()
-    if n_new == 0:
-        return dict(profile)
-    sent = base.select(
-        F.explode(F.split(F.col(column), r"\.")).alias("s")
-    ).where(F.trim("s") != "")
-    srow = sent.agg(
-        F.count("*").alias("n_sent"),
-        F.coalesce(
-            F.sum(
-                F.size(F.filter(F.split(F.col("s"), r"\s+"), lambda x: x != ""))
-            ),
-            F.lit(0),
-        ).alias("len_sum"),
-    ).collect()[0]
 
-    merged_vocab = dict(profile["vocab"])
-    for r in new_vocab_rows:
-        merged_vocab[r.token] = merged_vocab.get(r.token, 0) + int(r.cnt)
-    total = sum(merged_vocab.values())
-
-    # style: token-side stats are pure functions of the merged vocab
-    tc = max(total, 1)
-    awl = sum(len(t) * c for t, c in merged_vocab.items()) / tc
-    old_sent_sum = (
-        profile["style"]["avg_sentence_len"] * profile["n_sentences"]
-    )
-    n_sent = profile["n_sentences"] + int(srow.n_sent)
-    asl = (old_sent_sum + float(srow.len_sum)) / n_sent if n_sent else 0.0
-    style = {
-        "avg_sentence_len": float(asl),
-        "avg_word_len": float(awl),
-        "token_count": float(total),
-        "unique_token_count": float(len(merged_vocab)),
-        "diversity": float(len(merged_vocab) / tc),
-    }
-
-    # LM movement: JS between old and merged unigram distributions
-    old_total = max(profile["total_tokens"], 1)
-    js = 0.0
-    for t, mc in merged_vocab.items():
-        pr = profile["vocab"].get(t, 0) / old_total
-        pm = mc / tc
-        m = (pr + pm) / 2
-        if pr > 0:
-            js += 0.5 * pr * math.log(pr / m + 1e-10)
-        if pm > 0:
-            js += 0.5 * pm * math.log(pm / m + 1e-10)
-
-    # new docs scored under the MERGED LM (the stream's frozen-LM
-    # formula: Laplace floor for unknowns, denom = T + |V|)
-    denom = float(total + max(len(merged_vocab), 1))
-    frozen = new_data.sparkSession.createDataFrame(
-        list(merged_vocab.items()), "token string, cr bigint"
-    ).where(F.col("token") != "")
-    ppl_row = (
-        _tokens(new_data, column)
-        .join(F.broadcast(frozen), "token", "left")
-        .select(
-            "_doc",
-            F.log(
-                (F.coalesce(F.col("cr"), F.lit(0)) + 1.0) / F.lit(denom)
-            ).alias("logp"),
-        )
-        .groupBy("_doc")
-        .agg(F.exp(-F.avg("logp")).alias("ppl"))
-        .agg(
-            F.coalesce(F.avg("ppl"), F.lit(0.0)).alias("m"),
-            F.count("*").alias("c"),
-        )
-        .collect()[0]
-    )
-    new_mean_ppl, n_ppl_new = float(ppl_row.m), int(ppl_row.c)
-    n_old = profile["n"]
-    # mix weighted by SCORED doc counts: a tokenless doc (whitespace-only
-    # transcript) never enters either side's average, so weighting by
-    # raw doc counts would drag the mean toward the 0.0 placeholder
-    n_ppl_old = int(profile.get("n_ppl_docs", n_old))
-    n_ppl = n_ppl_old + n_ppl_new
-    mean_ppl = (
-        (
-            n_ppl_old * profile["ref_mean_perplexity"]
-            + n_ppl_new * new_mean_ppl
-        )
-        / n_ppl
-        if n_ppl
-        else profile["ref_mean_perplexity"]
-    )
-
-    merged = {
-        **profile,
-        "n": int(n_old + n_new),
-        "vocab": merged_vocab,
-        "total_tokens": int(total),
-        "style": style,
-        "n_sentences": int(n_sent),
-        "ref_mean_perplexity": float(mean_ppl),
-        "n_ppl_docs": int(n_ppl),
-        "ppl_lm_divergence": float(js),
-        "needs_ppl_rescore": bool(js > lm_divergence_threshold),
-    }
-    if topic_column is not None:
-        tdf = base.where(
-            F.col(topic_column).isNotNull() & (F.size(F.col(topic_column)) > 0)
-        )
-        counts = (
-            assign_topics(tdf, topic_column)
-            .groupBy("topic")
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        )
-        old_n = profile.get("topics_n", 0)
-        acc = {k: p * old_n for k, p in profile["topics"].items()}
-        for r in counts:
-            k = str(int(r.topic))
-            acc[k] = acc.get(k, 0.0) + int(r.cnt)
-        tot = sum(acc.values()) or 1.0
-        merged["topics"] = {k: v / tot for k, v in acc.items()}
-        merged["topics_n"] = int(old_n + sum(int(r.cnt) for r in counts))
-    return merged
+# ---- the stream ------------------------------------------------------------
 
 
 def _norm_diff(a: float, b: float) -> float:
@@ -336,9 +394,8 @@ def _topic_js(ref_p: dict[str, float], cur_counts: dict[int, int]) -> float:
     """C12's JS (epsilon INSIDE the log, ``semantic.py:244-271``) over
     the union of frozen and batch topics — O(#topics) driver math."""
     tot = float(sum(cur_counts.values())) or 1.0
-    keys = set(ref_p) | {str(t) for t in cur_counts}
     js = 0.0
-    for k in keys:
+    for k in set(ref_p) | {str(t) for t in cur_counts}:
         pr = ref_p.get(k, 0.0)
         pc = cur_counts.get(int(k), 0) / tot
         m = (pr + pc) / 2
@@ -347,137 +404,52 @@ def _topic_js(ref_p: dict[str, float], cur_counts: dict[int, int]) -> float:
     return js
 
 
-_ZERO = {
-    "jaccard": 0.0, "js": 0.0, "vocab_diff": 0.0, "style_diff": 0.0,
-    "lexical_score": 0.0, "lexical_drift": False,
-    "mean_perplexity": 0.0, "ppl_rel_change": 0.0, "ppl_score": 0.0,
-    "ppl_drift": False,
+# a known group whose batch docs carry no tokens gets NULL aggregates
+# from the left joins; these are the values the global path's empty
+# aggregates mean
+_ROW_DEFAULTS = {
+    "union_n": 1, "inter_n": 0, "js": 0.0, "cur_vocab": 0, "tc_c": 0,
+    "awl_num": 0, "ippl": 0.0, "n_sent": 0, "len_sum": 0, "topics": {},
 }
 
 
-def _batch_row(
-    spark: SparkSession, batch_df: DataFrame, profile: dict
-) -> tuple:
-    """The ONE fused action: (vocab metrics ⋈ token stats) × ppl ×
-    sentence stats × doc count, collected as a single row."""
-    column = profile["column"]
-    rt = float(max(profile["total_tokens"], 1))
-    denom = float(profile["total_tokens"] + max(len(profile["vocab"]), 1))
-
-    frozen = spark.createDataFrame(
-        list(profile["vocab"].items()) or [("", 0)], "token string, cr bigint"
-    ).where(F.col("token") != "")
-    # The vocab-join and perplexity subframes both consume the exploded
-    # token frame; persisting it keeps the tokenize+explode (and the
-    # batch-source read feeding it) to ONE execution per micro-batch —
-    # the bench recorded numInputRows ~4x the backlog before (guide §5:
-    # persist exactly the reused, expensive-to-recompute intermediate).
-    # Scope: created and dropped inside this one batch computation.
-    toks = _tokens(batch_df, column).persist()
-    cur_tc = toks.groupBy("token").agg(F.count("*").alias("cc"))
-
-    # C13 vocab metrics + batch token-level style stats in one subframe:
-    # the batch token total enters via a broadcast 1-row crossJoin (the
-    # corpus-scale totals shape — no single-partition window)
-    ct_tot = cur_tc.agg(
-        F.greatest(F.coalesce(F.sum("cc"), F.lit(0)), F.lit(1)).alias("ct")
-    )
-    j = frozen.join(cur_tc, "token", "full_outer").crossJoin(F.broadcast(ct_tot))
-    both = F.col("cr").isNotNull() & F.col("cc").isNotNull()
-    p = F.col("cr").cast("double") / F.lit(rt)
-    q = F.col("cc").cast("double") / F.col("ct").cast("double")
-    m = (p + q) / 2
-    vocab_row = j.agg(
-        F.count("*").alias("union_n"),
-        F.sum(both.cast("bigint")).alias("inter_n"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    both,
-                    0.5 * p * F.log(p / m + 1e-10) + 0.5 * q * F.log(q / m + 1e-10),
-                )
-            ),
-            F.lit(0.0),
-        ).alias("js"),
-        F.sum(F.col("cc").isNotNull().cast("bigint")).alias("cur_vocab"),
-        F.coalesce(F.sum("cc"), F.lit(0)).alias("tc_c"),
-        F.coalesce(F.sum(F.length("token") * F.col("cc")), F.lit(0)).alias("awl_num"),
-    )
-
-    # C11: per-doc perplexity under the FROZEN LM (broadcast join,
-    # Laplace floor for unknown tokens — same formula as
-    # unigram_perplexities but with frozen counts)
-    ppl_row = (
-        toks.join(F.broadcast(frozen), "token", "left")
-        .select(
-            "_doc",
-            F.log((F.coalesce(F.col("cr"), F.lit(0)) + 1.0) / F.lit(denom)).alias(
-                "logp"
-            ),
-        )
-        .groupBy("_doc")
-        .agg(F.exp(-F.avg("logp")).alias("ppl"))
-        .agg(F.coalesce(F.avg("ppl"), F.lit(0.0)).alias("mean_ppl"))
-    )
-
-    base = batch_df.where(F.col(column).isNotNull())
-    sent_row = (
-        base.select(F.explode(F.split(F.col(column), r"\.")).alias("s"))
-        .where(F.trim("s") != "")
-        .agg(
-            F.coalesce(
-                F.avg(
-                    F.size(F.filter(F.split(F.col("s"), r"\s+"), lambda x: x != ""))
-                ),
-                F.lit(0.0),
-            ).alias("asl_c")
-        )
-    )
-    n_row = base.agg(F.count("*").alias("n"))
-    try:
-        return (
-            vocab_row.crossJoin(ppl_row).crossJoin(sent_row).crossJoin(n_row).collect()[0]
-        )
-    finally:
-        toks.unpersist()
-
-
 def _text_metrics(
-    row, profile: dict, lexical_threshold: float, ppl_threshold: float
-) -> dict:
-    """O(1) driver arithmetic from the fused row's aggregates."""
-    union_n = max(int(row.union_n), 1)
-    jaccard = 1.0 - int(row.inter_n) / union_n
-    js = float(row.js)
+    r: dict,
+    cell: dict,
+    topic_col,
+    lexical_threshold: float,
+    ppl_threshold: float,
+    topic_threshold: float,
+) -> tuple:
+    """O(1) driver arithmetic (O(#topics) with topics) from one group's
+    aggregates: the sink columns between ``n`` and ``gated``."""
+    union_n = max(int(r["union_n"]), 1)
+    jaccard = 1.0 - int(r["inter_n"]) / union_n
+    js = float(r["js"])
     # disjoint vocabularies: bare jaccard (semantic.py:396-398)
-    vocab_diff = (
-        jaccard if int(row.inter_n) == 0 else 0.5 * jaccard + 0.5 * min(js, 1.0)
-    )
-    st = profile["style"]
-    tc_c = max(int(row.tc_c), 1)
-    awl_c = float(row.awl_num) / tc_c if int(row.tc_c) else 0.0
-    div_c = int(row.cur_vocab) / tc_c if int(row.tc_c) else 0.0
+    vocab_diff = jaccard if int(r["inter_n"]) == 0 else 0.5 * jaccard + 0.5 * min(js, 1.0)
+    st = cell["style"]
+    tc = int(r["tc_c"])
+    asl = r["len_sum"] / r["n_sent"] if r["n_sent"] else 0.0
     style_diff = (
-        0.4 * _norm_diff(st["avg_sentence_len"], float(row.asl_c))
-        + 0.3 * _norm_diff(st["avg_word_len"], awl_c)
-        + 0.3 * abs(st["diversity"] - div_c)
+        0.4 * _norm_diff(st["avg_sentence_len"], float(asl))
+        + 0.3 * _norm_diff(st["avg_word_len"], float(r["awl_num"]) / tc if tc else 0.0)
+        + 0.3 * abs(st["diversity"] - (int(r["cur_vocab"]) / tc if tc else 0.0))
     )
     lex = 0.6 * vocab_diff + 0.4 * style_diff
-    ref_ppl = profile["ref_mean_perplexity"]
-    mean_ppl = float(row.mean_ppl)
+    ref_ppl = cell["ref_mean_perplexity"]
+    mean_ppl = _denom(cell["vocab"]) * float(r["ippl"])
     rel = abs(mean_ppl - ref_ppl) / max(ref_ppl, 1e-10)
-    return {
-        "jaccard": float(jaccard),
-        "js": js,
-        "vocab_diff": float(vocab_diff),
-        "style_diff": float(style_diff),
-        "lexical_score": float(lex),
-        "lexical_drift": bool(lex > lexical_threshold),
-        "mean_perplexity": mean_ppl,
-        "ppl_rel_change": float(rel),
-        "ppl_score": float(min(rel / ppl_threshold, 1.0)),
-        "ppl_drift": bool(rel > ppl_threshold),
-    }
+    topic = (None, None, None)
+    if topic_col:
+        tj = _topic_js(cell["topics"], r["topics"])
+        topic = (float(tj), float(min(tj / topic_threshold, 1.0)), bool(tj > topic_threshold))
+    return (
+        float(jaccard), js, float(vocab_diff), float(style_diff), float(lex),
+        bool(lex > lexical_threshold), mean_ppl, float(rel),
+        float(min(rel / ppl_threshold, 1.0)), bool(rel > ppl_threshold), *topic,
+        bool(lex > lexical_threshold or rel > ppl_threshold or topic[2]),
+    )
 
 
 def stream_text_drift(
@@ -495,712 +467,87 @@ def stream_text_drift(
     topic_threshold: float = TOPIC_THRESHOLD,
 ):
     """Per-micro-batch lexical + perplexity (+ topic) drift vs a frozen
-    text profile.  One metrics row per epoch at ``<out>/text_metrics``
-    (``TEXT_METRICS_SCHEMA``); epoch-partition overwrite keeps replays
-    idempotent.  Returns the streaming query.
-    """
-    topic_col = profile.get("topic_column")
-    sink = os.path.join(out_dir, "text_metrics")
-    checkpoint = os.path.join(out_dir, "_text_stream_checkpoint")
+    text profile of either shape; returns the streaming query.
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        # one source read per micro-batch: the fused row's subframes and
-        # the topic pass all come off this cached slice
-        batch_df = batch_df.persist()
+    ONE aggregate tree and one action per batch for every cell (see the
+    module docstring).  Rows go to ``<out_dir>/text_metrics`` (global:
+    one per epoch, gated ``n=0`` rows included) or
+    ``text_metrics_grouped`` (per profiled group, plus the
+    ``unknown_group`` / ``empty_batch`` rows), schema
+    ``TEXT_METRICS_SCHEMA`` (keyed: keys first, then ``gated_reason``).
+    """
+    keys = list(profile.get("keys") or ())
+    column, topic_col = profile["column"], profile.get("topic_column")
+    known = cells(profile)
+    # every group's frozen LM, built once per stream
+    frozen = _lm_frame(spark, keys, {g: c["vocab"] for g, c in known.items()})
+
+    def batch_rows(batch_df: DataFrame) -> list[tuple]:
+        # one source read + one tokenize per micro-batch: every subframe
+        # below reuses these two cached slices, dropped with the batch
+        docs = _docs(batch_df, keys, column, topic_col).persist()
+        toks = _tokens(docs, keys, column).persist()
         try:
-            row = _batch_row(spark, batch_df, profile)
-        except Exception:
-            batch_df.unpersist()
-            raise
-        n = int(row.n)
-        gated = n < min_samples
-        m = (
-            dict(_ZERO)
-            if gated
-            else _text_metrics(row, profile, lexical_threshold, ppl_threshold)
-        )
-        topic_js = topic_score = topic_drift = None
-        try:
-            if topic_col is not None and not gated:
-                counts = (
-                    assign_topics(
-                        batch_df.where(
-                            F.col(topic_col).isNotNull()
-                            & (F.size(F.col(topic_col)) > 0)
-                        ),
-                        topic_col,
-                    )
-                    .groupBy("topic")
-                    .agg(F.count("*").alias("cnt"))
-                    .collect()
-                )
-                tj = _topic_js(profile["topics"], {int(r.topic): int(r.cnt) for r in counts})
-                topic_js = float(tj)
-                topic_score = float(min(tj / topic_threshold, 1.0))
-                topic_drift = bool(tj > topic_threshold)
-        finally:
-            batch_df.unpersist()
-        detected = bool(
-            m["lexical_drift"] or m["ppl_drift"] or (topic_drift or False)
-        )
-        out_row = [
-            (
-                run_id, n,
-                m["jaccard"], m["js"], m["vocab_diff"], m["style_diff"],
-                m["lexical_score"], m["lexical_drift"],
-                m["mean_perplexity"], m["ppl_rel_change"], m["ppl_score"],
-                m["ppl_drift"],
-                topic_js, topic_score, topic_drift,
-                detected, bool(gated),
+            cur = toks.groupBy(*keys, "token").agg(F.count("*").alias("cc"))
+            # the batch token totals enter via a broadcast join on the
+            # keys (a cross join for a global profile)
+            ct = cur.groupBy(*keys).agg(
+                F.greatest(F.sum("cc"), F.lit(1)).cast("double").alias("__ct")
             )
-        ]
-        spark.createDataFrame(out_row, _SINK_ROW_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(f"{sink}/epoch={int(epoch_id)}")
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(text_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
-
-
-def _tokens_grouped(df: DataFrame, col: str, keys: list[str]) -> DataFrame:
-    """(keys..., _doc, token) — reference tokenization with the group
-    keys carried through the explode."""
-    return (
-        df.withColumn("_doc", F.monotonically_increasing_id())
-        .select(
-            *keys,
-            "_doc",
-            F.explode(F.split(F.lower(F.col(col)), r"\s+")).alias("token"),
-        )
-        .where(F.col("token") != "")
-    )
-
-
-def text_reference_profile_grouped(
-    ref: DataFrame, keys: list[str], column: str, topic_column: str | None = None
-) -> dict:
-    """Frozen PER-GROUP text profiles (the reference's per-provider
-    semantic loop, frozen at stream start).
-
-    A handful of grouped jobs once per stream: per-group vocab counts,
-    per-group style aggregates (sentence/token stats), per-group own-LM
-    mean perplexity, and optionally per-group topic distributions.
-    Driver state is O(Σ per-group |window vocab| + #groups x #topics) —
-    bounded by drift-WINDOW vocabulary under reference semantics, same
-    contract as the global profile.  Keys canonicalize to string
-    SPARK-side and rows with any NULL key are not profiled (the
-    distribution/embedding profiles' rules); the stream and the update
-    count them as unknown-group rows.
-
-    Unlike the global builder there is no MIN_SAMPLES refusal: gating
-    is per (group, batch) at stream time, and a small group's baseline
-    should not block freezing every other group's.
-    """
-    base = ref.where(F.col(column).isNotNull()).select(
-        *[F.col(k).cast("string").alias(k) for k in keys],
-        column,
-        *([topic_column] if topic_column else []),
-    ).dropna(subset=list(keys))
-    if base.limit(1).count() == 0:
-        raise ValueError(f"reference window has no non-null {column} docs")
-    n_rows = base.groupBy(*keys).agg(F.count("*").alias("n")).collect()
-
-    toks = _tokens_grouped(base, column, keys)
-    vocab_rows = (
-        toks.groupBy(*keys, "token").agg(F.count("*").alias("cnt")).collect()
-    )
-    vocab: dict[tuple, dict[str, int]] = {}
-    for r in vocab_rows:
-        vocab.setdefault(tuple(r[k] for k in keys), {})[r.token] = int(r.cnt)
-
-    tok_stats = {
-        tuple(r[k] for k in keys): r
-        for r in toks.groupBy(*keys)
-        .agg(
-            F.avg(F.length("token")).alias("awl"),
-            F.count("*").alias("tc"),
-            F.countDistinct("token").alias("utc"),
-        )
-        .collect()
-    }
-    sent_stats = {
-        tuple(r[k] for k in keys): (float(r.asl), int(r.n_sent))
-        for r in base.select(
-            *keys, F.explode(F.split(F.col(column), r"\.")).alias("s")
-        )
-        .where(F.trim("s") != "")
-        .groupBy(*keys)
-        .agg(
-            F.avg(
-                F.size(F.filter(F.split(F.col("s"), r"\s+"), lambda x: x != ""))
-            ).alias("asl"),
-            F.count("*").alias("n_sent"),
-        )
-        .collect()
-    }
-
-    # per-group own-LM mean perplexity: score the reference docs under
-    # their OWN group's frozen Laplace LM (C11's baseline, per group)
-    groups = sorted(vocab)
-    frozen = _frozen_vocab_frame(base.sparkSession, keys, vocab)
-    denoms = {
-        g: float(sum(v.values()) + max(len(v), 1)) for g, v in vocab.items()
-    }
-    dframe = base.sparkSession.createDataFrame(
-        [(*g, denoms[g]) for g in groups],
-        ", ".join(f"{k} string" for k in keys) + ", __denom double",
-    )
-    ppl_rows = (
-        toks.join(F.broadcast(frozen), [*keys, "token"], "left")
-        .join(F.broadcast(dframe), keys)
-        .select(
-            *keys,
-            "_doc",
-            F.log((F.coalesce(F.col("cr"), F.lit(0)) + 1.0) / F.col("__denom")).alias(
-                "logp"
-            ),
-        )
-        .groupBy(*keys, "_doc")
-        .agg(F.exp(-F.avg("logp")).alias("ppl"))
-        .groupBy(*keys)
-        .agg(F.avg("ppl").alias("mean_ppl"), F.count("*").alias("n_ppl"))
-        .collect()
-    )
-    mean_ppls = {tuple(r[k] for k in keys): float(r.mean_ppl) for r in ppl_rows}
-    n_ppls = {tuple(r[k] for k in keys): int(r.n_ppl) for r in ppl_rows}
-
-    profiles: dict[tuple, dict] = {}
-    for r in n_rows:
-        g = tuple(r[k] for k in keys)
-        v = vocab.get(g, {})
-        ts = tok_stats.get(g)
-        tc = int(ts.tc) if ts is not None else 0
-        asl, n_sent = sent_stats.get(g, (0.0, 0))
-        profiles[g] = {
-            "n": int(r.n),
-            "vocab": v,
-            "total_tokens": int(sum(v.values())),
-            "style": {
-                "avg_sentence_len": asl,
-                "avg_word_len": float(ts.awl) if ts is not None else 0.0,
-                "token_count": tc,
-                "unique_token_count": int(ts.utc) if ts is not None else 0,
-                "diversity": (int(ts.utc) / max(tc, 1)) if ts is not None else 0.0,
-            },
-            "n_sentences": n_sent,
-            "ref_mean_perplexity": mean_ppls.get(g, 0.0),
-            "n_ppl_docs": n_ppls.get(g, 0),
-        }
-    if topic_column is not None:
-        tcounts = (
-            assign_topics(
-                base.where(
-                    F.col(topic_column).isNotNull()
-                    & (F.size(F.col(topic_column)) > 0)
-                ),
-                topic_column,
-            )
-            .groupBy(*keys, "topic")
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        )
-        per_group: dict[tuple, dict[int, int]] = {}
-        for r in tcounts:
-            per_group.setdefault(tuple(r[k] for k in keys), {})[int(r.topic)] = int(
-                r.cnt
-            )
-        for g, p in profiles.items():
-            counts = per_group.get(g, {})
-            tot = float(sum(counts.values())) or 1.0
-            p["topics"] = {str(t): c / tot for t, c in counts.items()}
-            p["topics_n"] = int(sum(counts.values()))
-    out = {
-        "kind": "text_grouped",
-        "column": column,
-        "keys": list(keys),
-        "profiles": profiles,
-    }
-    if topic_column is not None:
-        out["topic_column"] = topic_column
-    return out
-
-
-def _frozen_vocab_frame(spark, keys: list[str], vocab: dict) -> DataFrame:
-    """Tiny (Σ per-group vocab) frame: (keys..., token, cr)."""
-    rows = [
-        (*g, t, c) for g, toks in vocab.items() for t, c in toks.items()
-    ] or [(*([None] * len(keys)), "", 0)]
-    ddl = ", ".join(f"{k} string" for k in keys) + ", token string, cr bigint"
-    return spark.createDataFrame(rows, ddl).where(F.col("token") != "")
-
-
-def stream_text_drift_grouped(
-    spark: SparkSession,
-    text_dir: str,
-    profile: dict,
-    out_dir: str,
-    schema,
-    run_id: str = "drift-stream",
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-    min_samples: int = MIN_SAMPLES,
-    lexical_threshold: float = LEXICAL_THRESHOLD,
-    ppl_threshold: float = PERPLEXITY_THRESHOLD,
-    topic_threshold: float = TOPIC_THRESHOLD,
-):
-    """Per-GROUP per-micro-batch text drift vs frozen per-group text
-    profiles — every group's lexical/perplexity inputs ride ONE
-    aggregate tree per batch (the frozen vocab frame broadcast full-
-    outer-joins the batch token counts by (group, token); per-doc
-    perplexity under each group's OWN frozen LM; per-group sentence
-    stats and doc counts; all grouped subframes joined on the keys and
-    collected in a single action — never a job per group), then
-    O(#groups) driver arithmetic reproduces the batch detectors'
-    score/verdict sequence per group.
-
-    Row conventions match :func:`~.drift_stream.stream_drift_grouped`:
-    one row per (group, epoch) at ``<out>/text_metrics_grouped``;
-    batch rows whose group has no frozen profile (or whose keys are
-    NULL) collapse into a NULL-keyed ``gated_reason='unknown_group'``
-    row; gated known groups carry ``'min_samples'``; an empty batch
-    writes a NULL-keyed ``'empty_batch'`` placeholder; each epoch's
-    partition is OVERWRITTEN so foreachBatch replays are idempotent.
-    """
-    column = profile["column"]
-    keys = profile["keys"]
-    profiles = profile["profiles"]
-    topic_col = profile.get("topic_column")
-    sink = os.path.join(out_dir, "text_metrics_grouped")
-    checkpoint = os.path.join(out_dir, "_text_stream_grouped_checkpoint")
-    out_schema = ", ".join(f"{k} string" for k in keys) + (
-        ", " + _SINK_ROW_SCHEMA + ", gated_reason string"
-    )
-
-    frozen = _frozen_vocab_frame(
-        spark, keys, {g: p["vocab"] for g, p in profiles.items()}
-    )
-    known = spark.createDataFrame(
-        [
-            (
-                *g,
-                float(max(p["total_tokens"], 1)),
-                float(p["total_tokens"] + max(len(p["vocab"]), 1)),
-            )
-            for g, p in profiles.items()
-        ],
-        ", ".join(f"{k} string" for k in keys) + ", __rt double, __denom double",
-    )
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        base = batch_df.where(F.col(column).isNotNull()).select(
-            *[F.col(k).cast("string").alias(k) for k in keys],
-            column,
-            *([topic_col] if topic_col else []),
-        )
-        # rows whose group has no frozen profile get NULL keys so they
-        # collapse into ONE unknown bucket (NULL join keys match
-        # nothing downstream, exactly like the distribution variant)
-        marked = base.join(F.broadcast(known), keys, "left")
-        basek = marked.select(
-            *[
-                F.when(F.col("__rt").isNotNull(), F.col(k)).alias(k)
-                for k in keys
-            ],
-            column,
-            *([topic_col] if topic_col else []),
-            "__rt",
-            "__denom",
-        )
-        # one source read + one tokenize per micro-batch (see the global
-        # variant): the n/vocab/ppl/sentence/topic subframes all reuse
-        # these two cached slices, dropped at the end of the batch
-        basek = basek.persist()
-        kb = basek.where(F.col("__rt").isNotNull())  # known-group rows
-
-        n_frame = basek.groupBy(*keys).agg(F.count("*").alias("n"))
-
-        toks = _tokens_grouped(kb, column, keys).persist()
-        cur_tc = toks.groupBy(*keys, "token").agg(F.count("*").alias("cc"))
-        ct_tot = cur_tc.groupBy(*keys).agg(
-            F.greatest(F.sum("cc"), F.lit(1)).cast("double").alias("__ct")
-        )
-        j = (
-            F.broadcast(frozen)
-            .join(cur_tc, [*keys, "token"], "full_outer")
-            .join(F.broadcast(ct_tot), keys, "left")
-            .join(F.broadcast(known), keys)
-        )
-        both = F.col("cr").isNotNull() & F.col("cc").isNotNull()
-        p = F.col("cr").cast("double") / F.col("__rt")
-        q = F.col("cc").cast("double") / F.coalesce(F.col("__ct"), F.lit(1.0))
-        m = (p + q) / 2
-        vocab_frame = j.groupBy(*keys).agg(
-            F.count("*").alias("union_n"),
-            F.sum(both.cast("bigint")).alias("inter_n"),
-            F.coalesce(
+            j = join_on(frozen.join(cur, [*keys, "token"], "full_outer"), F.broadcast(ct), keys)
+            both = F.col("cr").isNotNull() & F.col("cc").isNotNull()
+            p = F.col("cr").cast("double") / F.col("__rt")
+            q = F.col("cc").cast("double") / F.col("__ct")
+            m = (p + q) / 2
+            vocab = j.groupBy(*keys).agg(
+                F.count("*").alias("union_n"),
+                F.sum(both.cast("bigint")).alias("inter_n"),
                 F.sum(
                     F.when(
                         both,
-                        0.5 * p * F.log(p / m + 1e-10)
-                        + 0.5 * q * F.log(q / m + 1e-10),
+                        0.5 * p * F.log(p / m + 1e-10) + 0.5 * q * F.log(q / m + 1e-10),
                     )
-                ),
-                F.lit(0.0),
-            ).alias("js"),
-            F.sum(F.col("cc").isNotNull().cast("bigint")).alias("cur_vocab"),
-            F.coalesce(F.sum("cc"), F.lit(0)).alias("tc_c"),
-            F.coalesce(F.sum(F.length("token") * F.col("cc")), F.lit(0)).alias(
-                "awl_num"
-            ),
-        )
-
-        ppl_frame = (
-            toks.join(F.broadcast(frozen), [*keys, "token"], "left")
-            .join(F.broadcast(known), keys)
-            .select(
-                *keys,
-                "_doc",
-                F.log(
-                    (F.coalesce(F.col("cr"), F.lit(0)) + 1.0) / F.col("__denom")
-                ).alias("logp"),
+                ).alias("js"),
+                F.sum(F.col("cc").isNotNull().cast("bigint")).alias("cur_vocab"),
+                F.sum("cc").alias("tc_c"),
+                F.sum(F.length("token") * F.col("cc")).alias("awl_num"),
             )
-            .groupBy(*keys, "_doc")
-            .agg(F.exp(-F.avg("logp")).alias("ppl"))
-            .groupBy(*keys)
-            .agg(F.avg("ppl").alias("mean_ppl"))
-        )
-
-        sent_frame = (
-            kb.select(*keys, F.explode(F.split(F.col(column), r"\.")).alias("s"))
-            .where(F.trim("s") != "")
-            .groupBy(*keys)
-            .agg(
-                F.avg(
-                    F.size(F.filter(F.split(F.col("s"), r"\s+"), lambda x: x != ""))
-                ).alias("asl_c")
+            tree = join_on(
+                join_on(_doc_stats(docs, keys, column, topic_col), vocab, keys),
+                _ppl_stats(toks, keys, frozen),
+                keys,
             )
-        )
-
-        try:
-            rows = (
-                n_frame.join(vocab_frame, keys, "left")
-                .join(ppl_frame, keys, "left")
-                .join(sent_frame, keys, "left")
-                .collect()
-            )
-
-            topic_counts: dict[tuple, dict[int, int]] = {}
-            if topic_col is not None:
-                for r in (
-                    assign_topics(
-                        kb.where(
-                            F.col(topic_col).isNotNull()
-                            & (F.size(F.col(topic_col)) > 0)
-                        ),
-                        topic_col,
-                    )
-                    .groupBy(*keys, "topic")
-                    .agg(F.count("*").alias("cnt"))
-                    .collect()
-                ):
-                    topic_counts.setdefault(tuple(r[k] for k in keys), {})[
-                        int(r.topic)
-                    ] = int(r.cnt)
+            rows = {
+                group_of(r, keys): {
+                    **_ROW_DEFAULTS,
+                    **{k: v for k, v in r.asDict().items() if v is not None},
+                }
+                for r in tree.collect()
+            }
         finally:
             toks.unpersist()
-            basek.unpersist()
+            docs.unpersist()
+        return epoch_rows(
+            keys, known, {g: r["n"] for g, r in rows.items()},
+            lambda g: _text_metrics(
+                rows[g], known[g], topic_col, lexical_threshold, ppl_threshold,
+                topic_threshold,
+            ),
+            _ZERO, run_id, min_samples,
+        )
 
-        out_rows = []
-        n_unknown = 0
-        for r in sorted(rows, key=lambda r: tuple(str(r[k]) for k in keys)):
-            g = tuple(r[k] for k in keys)
-            if g not in profiles:  # NULL-key collapse bucket
-                n_unknown += int(r.n)
-                continue
-            n = int(r.n)
-            gated = n < min_samples
-            if gated:
-                met = dict(_ZERO)
-            else:
-                met = _text_metrics(
-                    _GroupRow(r), profiles[g], lexical_threshold, ppl_threshold
-                )
-            topic_js = topic_score = topic_drift = None
-            if topic_col is not None and not gated:
-                tj = _topic_js(profiles[g]["topics"], topic_counts.get(g, {}))
-                topic_js = float(tj)
-                topic_score = float(min(tj / topic_threshold, 1.0))
-                topic_drift = bool(tj > topic_threshold)
-            detected = bool(
-                met["lexical_drift"] or met["ppl_drift"] or (topic_drift or False)
-            )
-            out_rows.append(
-                (
-                    *g,
-                    run_id, n,
-                    met["jaccard"], met["js"], met["vocab_diff"],
-                    met["style_diff"], met["lexical_score"],
-                    met["lexical_drift"], met["mean_perplexity"],
-                    met["ppl_rel_change"], met["ppl_score"], met["ppl_drift"],
-                    topic_js, topic_score, topic_drift,
-                    detected, bool(gated),
-                    "min_samples" if gated else None,
-                )
-            )
-        if n_unknown:
-            out_rows.append(
-                (
-                    *([None] * len(keys)),
-                    run_id, int(n_unknown),
-                    0.0, 0.0, 0.0, 0.0, 0.0, False, 0.0, 0.0, 0.0, False,
-                    None, None, None, False, True, "unknown_group",
-                )
-            )
-        if not out_rows:
-            out_rows.append(
-                (
-                    *([None] * len(keys)),
-                    run_id, 0,
-                    0.0, 0.0, 0.0, 0.0, 0.0, False, 0.0, 0.0, 0.0, False,
-                    None, None, None, False, True, "empty_batch",
-                )
-            )
-        spark.createDataFrame(out_rows, out_schema).write.mode(
-            "overwrite"
-        ).parquet(f"{sink}/epoch={int(epoch_id)}")
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(text_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
-
-
-class _GroupRow:
-    """Null-tolerant view over a grouped result Row: a known group with
-    no batch tokens (all-whitespace docs) yields NULL aggregates from
-    the left joins; default them the way the global path's coalesces
-    do."""
-
-    _DEFAULTS = {
-        "union_n": 1, "inter_n": 0, "js": 0.0, "cur_vocab": 0,
-        "tc_c": 0, "awl_num": 0, "mean_ppl": 0.0, "asl_c": 0.0,
-    }
-
-    def __init__(self, row):
-        self._row = row
-
-    def __getattr__(self, name):
-        v = self._row[name]
-        return self._DEFAULTS.get(name, 0) if v is None else v
-
-
-def update_text_reference_profile_grouped(
-    profile: dict,
-    new_data: DataFrame,
-    lm_divergence_threshold: float = 0.1,
-) -> dict:
-    """Fold ``new_data`` into EVERY group of a grouped text profile —
-    grouped one-pass jobs (per-group vocab counts, sentence sums, doc
-    counts, topic counts, and new-doc perplexity under each group's
-    MERGED LM via one broadcast join), then
-    :func:`update_text_reference_profile`'s per-group arithmetic:
-    vocab/style/topics merge EXACTLY; the own-LM mean perplexity mixes
-    doc-count-weighted with per-group ``ppl_lm_divergence`` /
-    ``needs_ppl_rescore`` staleness flags.  Rows from groups with no
-    frozen profile are counted and reported (``unknown_rows``), never
-    folded — a new provider is a re-freeze decision.  Profiles frozen
-    before ``n_sentences`` was stored are refused (re-freeze once).
-    """
-    for g, p in profile["profiles"].items():
-        if "n_sentences" not in p:
-            raise ValueError(
-                f"group {g} lacks n_sentences (frozen by an older builder)"
-                " — re-freeze once with text_reference_profile_grouped"
-            )
-    column = profile["column"]
-    keys = profile["keys"]
-    topic_column = profile.get("topic_column")
-    profiles = profile["profiles"]
-    spark = new_data.sparkSession
-    base = new_data.where(F.col(column).isNotNull()).select(
-        *[F.col(k).cast("string").alias(k) for k in keys],
-        column,
-        *([topic_column] if topic_column else []),
+    return run_stream(
+        spark, text_dir, schema, out_dir, "text", keys, _SINK_ROW_SCHEMA,
+        batch_rows, available_now, max_files_per_trigger,
     )
 
-    n_rows = {
-        tuple(r[k] for k in keys): int(r.n)
-        for r in base.groupBy(*keys).agg(F.count("*").alias("n")).collect()
-    }
-    unknown_rows = sum(n for g, n in n_rows.items() if g not in profiles)
-    if sum(n_rows.values()) == unknown_rows:  # nothing foldable
-        return {**profile, "unknown_rows": int(unknown_rows)}
 
-    toks = _tokens_grouped(base, column, keys)
-    new_vocab: dict[tuple, dict[str, int]] = {}
-    for r in (
-        toks.groupBy(*keys, "token").agg(F.count("*").alias("cnt")).collect()
-    ):
-        g = tuple(r[k] for k in keys)
-        if g in profiles:
-            new_vocab.setdefault(g, {})[r.token] = int(r.cnt)
-    sent_stats = {
-        tuple(r[k] for k in keys): (int(r.n_sent), int(r.len_sum))
-        for r in base.select(
-            *keys, F.explode(F.split(F.col(column), r"\.")).alias("s")
-        )
-        .where(F.trim("s") != "")
-        .groupBy(*keys)
-        .agg(
-            F.count("*").alias("n_sent"),
-            F.coalesce(
-                F.sum(
-                    F.size(
-                        F.filter(F.split(F.col("s"), r"\s+"), lambda x: x != "")
-                    )
-                ),
-                F.lit(0),
-            ).alias("len_sum"),
-        )
-        .collect()
-    }
-    topic_counts: dict[tuple, dict[int, int]] = {}
-    if topic_column is not None:
-        for r in (
-            assign_topics(
-                base.where(
-                    F.col(topic_column).isNotNull()
-                    & (F.size(F.col(topic_column)) > 0)
-                ),
-                topic_column,
-            )
-            .groupBy(*keys, "topic")
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        ):
-            topic_counts.setdefault(tuple(r[k] for k in keys), {})[
-                int(r.topic)
-            ] = int(r.cnt)
+# ---- legacy per-shape names: the profile carries the keys ------------------
 
-    # merge vocabularies first: new docs score under the MERGED LMs
-    merged_vocab = {
-        g: dict(p["vocab"]) for g, p in profiles.items()
-    }
-    for g, nv in new_vocab.items():
-        for t, c in nv.items():
-            merged_vocab[g][t] = merged_vocab[g].get(t, 0) + c
-    frozen = _frozen_vocab_frame(spark, keys, merged_vocab)
-    denoms = {
-        g: float(sum(v.values()) + max(len(v), 1))
-        for g, v in merged_vocab.items()
-    }
-    dframe = spark.createDataFrame(
-        [(*g, d) for g, d in denoms.items()],
-        ", ".join(f"{k} string" for k in keys) + ", __denom double",
-    )
-    new_ppls: dict[tuple, tuple[float, int]] = {
-        tuple(r[k] for k in keys): (float(r.mean_ppl), int(r.n_ppl))
-        for r in toks.join(F.broadcast(frozen), [*keys, "token"], "left")
-        .join(F.broadcast(dframe), keys)
-        .select(
-            *keys,
-            "_doc",
-            F.log(
-                (F.coalesce(F.col("cr"), F.lit(0)) + 1.0) / F.col("__denom")
-            ).alias("logp"),
-        )
-        .groupBy(*keys, "_doc")
-        .agg(F.exp(-F.avg("logp")).alias("ppl"))
-        .groupBy(*keys)
-        .agg(F.avg("ppl").alias("mean_ppl"), F.count("*").alias("n_ppl"))
-        .collect()
-    }
+update_text_reference_profile_grouped = update_text_reference_profile
+stream_text_drift_grouped = stream_text_drift
 
-    merged: dict[tuple, dict] = {}
-    for g, p in profiles.items():
-        n_new = n_rows.get(g, 0)
-        if n_new == 0:
-            merged[g] = dict(p)
-            continue
-        mv = merged_vocab[g]
-        total = sum(mv.values())
-        tc = max(total, 1)
-        awl = sum(len(t) * c for t, c in mv.items()) / tc
-        n_sent_new, len_sum_new = sent_stats.get(g, (0, 0))
-        old_sent_sum = p["style"]["avg_sentence_len"] * p["n_sentences"]
-        n_sent = p["n_sentences"] + n_sent_new
-        asl = (old_sent_sum + len_sum_new) / n_sent if n_sent else 0.0
 
-        old_total = max(p["total_tokens"], 1)
-        js = 0.0
-        for t, mc in mv.items():
-            pr = p["vocab"].get(t, 0) / old_total
-            pm = mc / tc
-            m = (pr + pm) / 2
-            if pr > 0:
-                js += 0.5 * pr * math.log(pr / m + 1e-10)
-            if pm > 0:
-                js += 0.5 * pm * math.log(pm / m + 1e-10)
-
-        n_old = p["n"]
-        # SCORED-doc weights, like the global update: a tokenless doc
-        # enters neither side's perplexity average
-        new_mean, n_ppl_new = new_ppls.get(g, (0.0, 0))
-        n_ppl_old = int(p.get("n_ppl_docs", n_old))
-        n_ppl = n_ppl_old + n_ppl_new
-        mean_ppl = (
-            (n_ppl_old * p["ref_mean_perplexity"] + n_ppl_new * new_mean)
-            / n_ppl
-            if n_ppl
-            else p["ref_mean_perplexity"]
-        )
-        mp = {
-            **p,
-            "n": int(n_old + n_new),
-            "vocab": mv,
-            "total_tokens": int(total),
-            "style": {
-                "avg_sentence_len": float(asl),
-                "avg_word_len": float(awl),
-                "token_count": total,
-                "unique_token_count": len(mv),
-                "diversity": float(len(mv) / tc),
-            },
-            "n_sentences": int(n_sent),
-            "ref_mean_perplexity": float(mean_ppl),
-            "n_ppl_docs": int(n_ppl),
-            "ppl_lm_divergence": float(js),
-            "needs_ppl_rescore": bool(js > lm_divergence_threshold),
-        }
-        if topic_column is not None:
-            old_n = p.get("topics_n", 0)
-            acc = {k: pr * old_n for k, pr in p.get("topics", {}).items()}
-            for t, c in topic_counts.get(g, {}).items():
-                acc[str(t)] = acc.get(str(t), 0.0) + c
-            tot = sum(acc.values()) or 1.0
-            mp["topics"] = {k: v / tot for k, v in acc.items()}
-            mp["topics_n"] = int(
-                old_n + sum(topic_counts.get(g, {}).values())
-            )
-        merged[g] = mp
-    return {**profile, "profiles": merged, "unknown_rows": int(unknown_rows)}
+def text_reference_profile_grouped(ref, keys, column, topic_column=None):
+    """:func:`text_reference_profile` per group of ``keys``."""
+    return text_reference_profile(ref, column, topic_column, keys=keys)

@@ -99,3 +99,27 @@ def test_duplicated_reference_rows_of_snr_candidates_emit_one_verdict(synth, fet
         (c, i) for c in ("dur_ms_mismatch", "snr_allclose") for i in exp[c]
     )
     assert got == want
+
+
+def test_deep_mode_duplicated_reference_rows_emit_one_verdict(synth):
+    """Deep SNR mode joins every clips row to its reference rows: k
+    reference rows for an id must still emit each verdict once."""
+    from llm_drift_detector_spark.checks.audio import audio_invariant_violations
+
+    clips, ref, exp = synth["clips"], synth["reference"], synth["expected"]
+    candidates = sorted(exp["dur_ms_mismatch"] | exp["snr_allclose"])
+    dup = ref.where(F.col("clip_id").isin(candidates))
+    tripled = ref.unionByName(dup).unionByName(dup)
+
+    def verdicts(reference):
+        return Counter(
+            (r.check_name, r.clip_id)
+            for r in audio_invariant_violations(
+                clips, reference, snr_mode="deep"
+            ).collect()
+        )
+
+    got, once = verdicts(tripled), verdicts(ref)
+    assert got == once
+    assert set(got.values()) == {1}
+    assert {c for c, _ in got} == {"dur_ms_mismatch", "snr_allclose"}

@@ -249,3 +249,109 @@ def test_monitor_cli_embedding_family(spark, tmp_path, capsys):
     bad[bad.index(str(tmp_path / "m1"))] = str(tmp_path / "m2")
     with pytest.raises(SystemExit, match="does not match"):
         monitor_stream.main(bad)
+
+
+def test_grouped_embedding_stream_matches_global_per_group(spark, tmp_path):
+    """Each group's streamed row equals the GLOBAL embedding stream run
+    on that group's slice alone: a global profile is the zero-key case
+    of the keyed one."""
+    import pyspark.sql.functions as F
+
+    from llm_drift_detector_spark.streaming import (
+        embedding_reference_profile,
+        embedding_reference_profile_grouped,
+        stream_embedding_drift,
+        stream_embedding_drift_grouped,
+    )
+
+    rng = np.random.default_rng(97)
+    ddl = "provider string, embedding array<float>"
+
+    def grp_rows(g, direction, n, noise=0.05):
+        return [(g, [float(x) for x in v]) for v in _vecs(rng, direction, n, noise)]
+
+    ref = spark.createDataFrame(
+        grp_rows("a", U, 300) + grp_rows("b", V, 400, noise=0.1), ddl
+    )
+    cur_rows = grp_rows("a", U, 120) + grp_rows("b", 0.6 * U + 0.8 * V, 90, noise=0.2)
+    cur = spark.createDataFrame(cur_rows, ddl)
+    gprof = embedding_reference_profile_grouped(ref, ["provider"], "embedding")
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    cur.coalesce(1).write.parquet(f"{src}/b0")
+    stream_embedding_drift_grouped(spark, src + "/b*", gprof, out, schema=ddl)
+    grouped = {
+        r.provider: r
+        for r in spark.read.parquet(f"{out}/embedding_metrics_grouped").collect()
+    }
+    assert set(grouped) == {"a", "b"}
+
+    for g in ("a", "b"):
+        sprof = embedding_reference_profile(
+            ref.where(F.col("provider") == g).drop("provider"), "embedding"
+        )
+        gsrc, gout = str(tmp_path / f"s_{g}"), str(tmp_path / f"o_{g}")
+        cur.where(F.col("provider") == g).drop("provider").coalesce(
+            1
+        ).write.parquet(f"{gsrc}/b0")
+        stream_embedding_drift(
+            spark, gsrc + "/b*", sprof, gout, schema="embedding array<float>"
+        )
+        solo = spark.read.parquet(f"{gout}/embedding_metrics").collect()[0]
+        got = grouped[g]
+        assert got.n == solo.n
+        for f in (
+            "centroid_distance", "variance_change", "avg_dist_to_ref",
+            "batch_rms", "drift_score",
+        ):
+            assert abs(got[f] - solo[f]) < 1e-9, (g, f, got[f], solo[f])
+        assert got.drift_detected == solo.drift_detected
+        assert got.gated == solo.gated
+    assert grouped["b"].drift_detected and not grouped["a"].drift_detected
+
+
+def test_wrong_dimension_rows_are_left_out_of_the_stream(spark, tmp_path):
+    """Rows whose array length differs from the frozen dim (one short,
+    one long) neither fail the query nor move any metric: global and
+    keyed rows equal those of the batch without them."""
+    from llm_drift_detector_spark.streaming import (
+        embedding_reference_profile,
+        embedding_reference_profile_grouped,
+        stream_embedding_drift,
+        stream_embedding_drift_grouped,
+    )
+
+    rng = np.random.default_rng(101)
+    ddl = "provider string, embedding array<float>"
+    good = [("a", [float(x) for x in v]) for v in _vecs(rng, U, 60, noise=0.2)]
+    bad = [("a", [1.0, 2.0]), ("a", [0.5] * (len(U) + 3))]
+    ref = spark.createDataFrame(
+        [("a", [float(x) for x in v]) for v in _vecs(rng, U, 200)], ddl
+    )
+    profiles = {
+        "embedding_metrics": embedding_reference_profile(ref, "embedding"),
+        "embedding_metrics_grouped": embedding_reference_profile_grouped(
+            ref, ["provider"], "embedding"
+        ),
+    }
+    streams = {
+        "embedding_metrics": stream_embedding_drift,
+        "embedding_metrics_grouped": stream_embedding_drift_grouped,
+    }
+
+    def metrics(rows, sink, tag):
+        src, out = str(tmp_path / f"src_{tag}"), str(tmp_path / f"out_{tag}")
+        spark.createDataFrame(rows, ddl).coalesce(1).write.parquet(f"{src}/b0")
+        streams[sink](spark, src + "/b*", profiles[sink], out, schema=ddl)
+        got = spark.read.parquet(f"{out}/{sink}").collect()
+        assert len(got) == 1
+        return got[0].asDict()
+
+    for sink in streams:
+        mixed = metrics(good[:30] + bad + good[30:], sink, f"{sink}_mixed")
+        clean = metrics(good, sink, f"{sink}_clean")
+        assert mixed["n"] == clean["n"] == 60
+        for k, v in clean.items():
+            if isinstance(v, float):
+                assert abs(mixed[k] - v) < 1e-12, (sink, k, mixed[k], v)
+            else:
+                assert mixed[k] == v, (sink, k)

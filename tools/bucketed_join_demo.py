@@ -31,6 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pyspark.sql.functions as F  # noqa: E402
 
 from llm_drift_detector_spark.checks.audio import (  # noqa: E402
+    _ROW_ID,
     AUDIO_VIOLATIONS_SCHEMA,
     _deep_validate_arrow,
 )
@@ -45,8 +46,10 @@ def pair_plan(cur, ref):
         F.col("bytes").alias("ref_bytes"),
         F.col("codec").alias("ref_codec"),
     )
-    pairs = cur.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec").join(
-        ref_p, "clip_id", "left"
+    pairs = (
+        cur.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec")
+        .withColumn("__row", _ROW_ID())
+        .join(ref_p, "clip_id", "left")
     )
     return pairs.mapInArrow(_deep_validate_arrow, schema=AUDIO_VIOLATIONS_SCHEMA)
 
