@@ -31,6 +31,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..checks.audio import _decode_np
+from ..session import local_frame
 from .dedup import DEFAULT_BANDS, DEFAULT_FRAMES, _fingerprint_bits
 
 
@@ -139,8 +140,8 @@ def audio_topk(
             F.col("id").isin([r.id for r in cand_rows])
         ).join(
             F.broadcast(
-                clips.sparkSession.createDataFrame(
-                    cand_rows, "id string, bands_matched bigint"
+                local_frame(
+                    clips.sparkSession, cand_rows, "id string, bands_matched bigint"
                 )
             ),
             "id",

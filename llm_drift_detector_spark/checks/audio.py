@@ -62,6 +62,7 @@ from pyspark.sql import DataFrame
 
 from ..codecs import WAV_HEADER_BYTES, wav_parse
 from ..config import CODEC_WHITELIST, DUR_MS_TOLERANCE, SNR_DB_MIN
+from ..session import local_frame
 
 AUDIO_VIOLATIONS_SCHEMA = "clip_id string, check_name string, detail string"
 
@@ -439,7 +440,8 @@ def audio_invariant_violations(
     ``max_collected_violations + 1`` rows) and, in the lazy fallback,
     the differing ids (at most ``max_fetch_ids + 1``).  The native dur
     verdicts and the SNR candidate ids are frozen into the returned
-    frame as local data: executing it re-runs only the decode stage (the
+    frame as local data (Arrow ``LocalRelation`` leaves, scanned in the
+    JVM with no Python worker): executing it re-runs only the decode stage (the
     flac / non-canonical wav dur checks and the SNR of the frozen
     candidates), so inputs changed after the call reach neither the
     native verdicts nor the candidate set.  Build the frame when its
@@ -603,7 +605,7 @@ def audio_invariant_violations(
     # violations) may each flag, but a repeated id in the broadcast
     # fetch frame would fan the join out and duplicate SNR verdicts
     ids = list(dict.fromkeys(r.clip_id for r in fused_rows if r.check_name == _DIFFERING))
-    native_dur_df = spark.createDataFrame(native_rows, AUDIO_VIOLATIONS_SCHEMA)
+    native_dur_df = local_frame(spark, native_rows, AUDIO_VIOLATIONS_SCHEMA)
 
     # --- 4. one merged Python stage for decode-dur + SNR ---------------
     # The SNR candidates' reference payloads (violation-rate-small) are
@@ -619,7 +621,7 @@ def audio_invariant_violations(
     # ``max_broadcast_fetch_ids`` the ref payload set is too big to
     # broadcast — fall back to the shuffled pair-join fetch.
     if len(ids) > max_broadcast_fetch_ids:
-        ids_df = spark.createDataFrame([(i,) for i in ids], "clip_id string")
+        ids_df = local_frame(spark, [(i,) for i in ids], "clip_id string")
         fetch_cur = cur.join(F.broadcast(ids_df), "clip_id").withColumn("__row", _ROW_ID())
         fetch_ref = reference.select(
             "clip_id",
@@ -638,7 +640,7 @@ def audio_invariant_violations(
     if len(ids) <= max_fetch_ids:
         fetch_ref = ref_sel.where(F.col("clip_id").isin(ids))
     else:
-        ids_df = spark.createDataFrame([(i,) for i in ids], "clip_id string")
+        ids_df = local_frame(spark, [(i,) for i in ids], "clip_id string")
         fetch_ref = ref_sel.join(F.broadcast(ids_df), "clip_id")
     decode_cond = (F.col("codec") == "flac") | (
         (F.col("codec") == "wav") & ~wav_canonical_pred()

@@ -43,6 +43,7 @@ from ..config import (
     EPS,
     MIN_SAMPLES,
 )
+from ..session import local_frame
 from .stattests import ks_2samp_p, welch_t
 
 _METRIC_FIELDS = (
@@ -317,7 +318,7 @@ def _stage3_driver(
             (*g, n_ref, n_cur, float(ks_d), float(js), float(psi), float(wd),
              float(wd_norm), float(t_stat), False)
         )
-    return df.sparkSession.createDataFrame(out, out_schema)
+    return local_frame(df.sparkSession, out, out_schema)
 
 
 def grouped_distribution_drift_binned(

@@ -20,6 +20,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from ..session import local_frame
 from .stattests import welch_t
 
 ERROR_FINISH_REASONS = ("error", "timeout", "content_filter")
@@ -227,7 +228,7 @@ def grouped_performance_drift(
             StructField("ref_std", DoubleType()),
             StructField("cur_std", DoubleType()),
         ]
-        return df.sparkSession.createDataFrame([], StructType(out_fields))
+        return local_frame(df.sparkSession, [], StructType(out_fields))
     st = df.groupBy(*keys).agg(*aggs)
 
     structs = []

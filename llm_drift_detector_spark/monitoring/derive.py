@@ -31,6 +31,7 @@ import os
 from datetime import datetime, timedelta
 
 from ..config import EMBEDDING_DETECTOR_THRESHOLD, LEXICAL_THRESHOLD
+from ..session import local_frame
 from .alerts import AlertManager
 
 # sink name -> (family kind, default score threshold)
@@ -185,7 +186,7 @@ def derive_stream_alerts(
     # by the reloaded cooldowns); the reverse order would mark epochs
     # processed with their alerts lost forever.
     if alert_rows:
-        spark.createDataFrame(alert_rows, ALERTS_SCHEMA).write.mode(
+        local_frame(spark, alert_rows, ALERTS_SCHEMA).write.mode(
             "append"
         ).parquet(os.path.join(out_dir, "alerts"))
     mgr.save_state(state_path)

@@ -12,13 +12,18 @@ killed job resumes only unfinished partitions.  Design:
   partition ids.
 - Buckets are processed in ``groups`` bucket groups (default 4), run as
   a two-deep pipeline: group g+1 plans, runs its eager audio pass and
-  writes while group g finishes its write, read-back and checkpoint.
+  writes while group g finishes its write and checkpoint.
   Each group writes its violation rows to ``violations/group=g/``
-  (overwrite = idempotent re-run); once that write has committed, the
-  calling thread appends one checkpoint row per bucket with lineage +
-  metrics (one append at a time).  A kill loses at most the two groups
-  in flight; re-running the same run_id anti-joins the checkpoint table
-  and executes only unfinished groups.  ``executed_groups[i]["secs"]``
+  (overwrite = idempotent re-run); the write itself counts its rows per
+  bucket (an ``Observation`` under the write, no read-back job).  Once
+  that write has committed, the calling thread appends one checkpoint
+  row per bucket with lineage + metrics (one append at a time).
+  Checkpoint and metric rows are driver-built: they enter Spark as
+  Arrow local relations (``session.local_frame``), so no append starts
+  a Python worker.  The returned summary's totals are the checkpoint
+  rows read at the start plus the ones this call appended.  A kill
+  loses at most the two groups in flight; re-running the same run_id
+  anti-joins the checkpoint table and executes only unfinished groups.  ``executed_groups[i]["secs"]``
   is the time from the previous checkpoint commit (or the start of the
   group phase) to this group's commit, so its prefix sums are the
   commit times.
@@ -39,7 +44,7 @@ from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.util import inheritable_thread_target
 
 from ..config import (
@@ -54,6 +59,7 @@ from ..checks.base import bucket_id
 from ..checks.domain import domain_violations
 from ..checks.stats import profile
 from ..drift import distribution_drift
+from ..session import local_frame
 
 CHECK_VERSIONS = {
     "uniqueness": "1.0",
@@ -321,9 +327,9 @@ def _violations_for_group(
         # executes this once globally (see run_validation).
         parts.append(_payload_duplicate_rows(clips_g, cfg))
     if not parts:
-        spark = clips_g.sparkSession
-        return spark.createDataFrame(
-            [], "check_name string, clip_id string, detail string, partition_id int"
+        return local_frame(
+            clips_g.sparkSession, [],
+            "check_name string, clip_id string, detail string, partition_id int",
         )
     out = parts[0]
     for p in parts[1:]:
@@ -343,27 +349,21 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
-def _checkpoints(spark: SparkSession, cfg: RunConfig) -> DataFrame:
-    """This run's checkpoint rows (explicit schema: no inference job)."""
-    return (
-        spark.read.schema(CHECKPOINT_DDL)
-        .parquet(os.path.join(cfg.out_dir, "checkpoints"))
-        .where(F.col("run_id") == cfg.run_id)
-    )
-
-
-def _completed_buckets(spark: SparkSession, cfg: RunConfig) -> set[int]:
+def _checkpoint_rows(spark: SparkSession, cfg: RunConfig) -> list[tuple]:
+    """This run's committed checkpoint rows as ``(partition_id, status,
+    rows_processed, violations_emitted)`` tuples (one small collect;
+    explicit schema: no inference job)."""
     path = os.path.join(cfg.out_dir, "checkpoints")
     if not _path_exists(spark, path):  # first run: nothing checkpointed yet
-        return set()
-    rows = (
-        _checkpoints(spark, cfg)
-        .where(F.col("status") != "pending")
-        .select("partition_id")
-        .distinct()
+        return []
+    return [
+        tuple(r)
+        for r in spark.read.schema(CHECKPOINT_DDL)
+        .parquet(path)
+        .where(F.col("run_id") == cfg.run_id)
+        .select("partition_id", "status", "rows_processed", "violations_emitted")
         .collect()
-    )
-    return {r.partition_id for r in rows}
+    ]
 
 
 def run_validation(
@@ -385,7 +385,10 @@ def run_validation(
     the exception is re-raised.
     """
     os.makedirs(cfg.out_dir, exist_ok=True)
-    done = _completed_buckets(spark, cfg)
+    # the run's checkpoint rows so far: they gate the resume here and,
+    # with the rows this call appends, are the summary's totals
+    cp_done = _checkpoint_rows(spark, cfg)
+    done = {b for b, status, _, _ in cp_done if status != "pending"}
     all_buckets = list(range(cfg.n_buckets))
     pending = [b for b in all_buckets if b not in done]
     groups: dict[int, list[int]] = {}
@@ -443,7 +446,10 @@ def run_validation(
 
     def run_group(g: int, buckets: list[int]) -> dict[int, int]:
         """Write one group's violations; return its per-bucket counts,
-        read back from the committed files (exact, no recompute)."""
+        observed on the rows the write consumed.  The observation sits
+        directly under the write, in its result stage, whose task
+        updates count once, so the counts equal the committed files'
+        (no read-back job)."""
         vio = _violations_for_group(
             clips.where(group_pred(clips, buckets)),
             transcripts.where(group_pred(transcripts, buckets)),
@@ -453,12 +459,12 @@ def run_validation(
             "run_id", F.lit(cfg.run_id)
         ).select("run_id", "check_name", "clip_id", "detail", "partition_id")
         group_path = os.path.join(cfg.out_dir, "violations", f"group={g}")
-        vio.write.mode("overwrite").parquet(group_path)
-        written = spark.read.schema(VIOLATIONS_DDL).parquet(group_path)
-        return {
-            r.partition_id: r["count"]
-            for r in written.groupBy("partition_id").count().collect()
-        }
+        counts = Observation()
+        vio.observe(
+            counts,
+            *[F.count(F.when(F.col("partition_id") == b, 1)).alias(str(b)) for b in buckets],
+        ).write.mode("overwrite").parquet(group_path)
+        return {int(b): n for b, n in counts.get.items()}
 
     def checkpoint(g: int, buckets: list[int], vio_counts: dict[int, int]) -> None:
         group_lineage = json.dumps({"group": g, **lineage})
@@ -473,9 +479,10 @@ def run_validation(
             )
             for b in buckets
         ]
-        spark.createDataFrame(cp_rows, CHECKPOINT_DDL).withColumn(
+        local_frame(spark, cp_rows, CHECKPOINT_DDL).withColumn(
             "completed_at", F.current_timestamp()
         ).write.mode("append").parquet(os.path.join(cfg.out_dir, "checkpoints"))
+        cp_appended.extend(r[1:5] for r in cp_rows)
 
     # Checkpoints are appended from this thread only (two concurrent
     # appends would share checkpoints/_temporary), and the next group
@@ -485,6 +492,7 @@ def run_validation(
     # Spark mutates per query.
     executed_groups = []
     executed_buckets: set[int] = set()
+    cp_appended: list[tuple] = []
     failure: Exception | None = None
     queue = iter(todo)
     t_last = time.time()
@@ -663,7 +671,8 @@ def run_validation(
                         )
                     )
     if compute_metrics:
-        metrics = spark.createDataFrame(
+        metrics = local_frame(
+            spark,
             metrics_rows,
             "run_id string, detector_name string, metric_name string, column string, "
             "drift_score double, threshold double, drift_detected boolean, p_value double, "
@@ -671,18 +680,17 @@ def run_validation(
         ).withColumn("timestamp", F.current_timestamp())
         metrics.write.mode("overwrite").parquet(metrics_path)
 
-    status = F.col("status")
-    totals = _checkpoints(spark, cfg).agg(
-        F.count(F.when(status == "pass", 1)).alias("buckets_pass"),
-        F.count(F.when(status == "fail", 1)).alias("buckets_fail"),
-        F.coalesce(F.sum("rows_processed"), F.lit(0)).alias("rows_processed"),
-        F.coalesce(F.sum("violations_emitted"), F.lit(0)).alias("violations_emitted"),
-    ).collect()[0]
+    # totals over every checkpoint row of the run: the ones read at the
+    # start plus the ones this call appended (no checkpoint-table job)
+    cp_all = cp_done + cp_appended
     return {
         "run_id": cfg.run_id,
         "global_metrics_computed": compute_metrics,
         "payload_duplicate_rows": payload_dup_count,
         "resumed_buckets_skipped": sorted(done),
         "executed_groups": executed_groups,
-        **totals.asDict(),
+        "buckets_pass": sum(status == "pass" for _, status, _, _ in cp_all),
+        "buckets_fail": sum(status == "fail" for _, status, _, _ in cp_all),
+        "rows_processed": sum(n or 0 for _, _, n, _ in cp_all),
+        "violations_emitted": sum(v or 0 for _, _, _, v in cp_all),
     }

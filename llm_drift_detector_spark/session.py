@@ -5,13 +5,20 @@ tests, the driver harness, bench.py — gets the same tuned configuration:
 AQE on (runtime re-plan + skew-join), Arrow enabled for pandas UDF
 exchange with a bounded batch size (audio ``bytes`` payloads are
 heavy-tailed; unbounded batches OOM a python worker at scale).
+
+Driver-built rows (verdicts, checkpoints, metric and sink rows) enter
+Spark through :func:`local_frame`.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _make_type_verifier
 
 from .config import ARROW_MAX_RECORDS_PER_BATCH, DEFAULT_SHUFFLE_PARTITIONS
 
@@ -112,3 +119,36 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | StructType
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema``
+    order) as an Arrow ``LocalRelation``.
+
+    ``spark.createDataFrame(list, schema)`` plans a ``Scan ExistingRDD``
+    over a pickled Python RDD: every action that reads it runs a stage
+    whose tasks start Python workers only to unpickle the rows.  A
+    ``pyarrow.Table`` becomes a ``LocalRelation`` instead, which the JVM
+    scans in place (no Python worker; a collect runs no job).  Each row
+    is checked against ``schema`` first with the same verifier the list
+    path applies, so a value of the wrong type or a NULL in a
+    non-nullable field raises instead of being coerced by Arrow (and a
+    non-string value for a string field raises where the list path
+    would ``str()`` it).
+    """
+    struct = spark._parse_ddl(schema) if isinstance(schema, str) else schema
+    verify = _make_type_verifier(struct)
+    internal = []
+    for row in rows:
+        verify(row)
+        # the list path's conversion: naive datetimes are local time
+        internal.append(struct.toInternal(row))
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*internal)) if internal else [[] for _ in struct.fields]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=struct)

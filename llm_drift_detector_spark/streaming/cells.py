@@ -19,6 +19,8 @@ from collections.abc import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 
 def cells(profile: dict) -> dict:
     """``{group tuple: cell}`` view of a profile; global profiles are
@@ -114,7 +116,7 @@ def run_stream(
     )
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark.createDataFrame(batch_rows(batch_df), ddl).write.mode(
+        local_frame(spark, batch_rows(batch_df), ddl).write.mode(
             "overwrite"
         ).parquet(f"{sink}/epoch={int(epoch_id)}")
 

@@ -54,6 +54,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import EPS, MIN_SAMPLES
+from ..session import local_frame
 
 # read-side schema of the global epoch sink: `epoch` materializes as the
 # partition column (each micro-batch OVERWRITES its own epoch=<k>
@@ -188,7 +189,7 @@ def _geometry_frame(spark, keys, columns, cells) -> DataFrame:
         ", __mns array<double>, __widths array<double>, "
         "__edges array<array<double>>"
     )
-    return spark.createDataFrame(rows, ddl)
+    return local_frame(spark, rows, ddl)
 
 
 def _binned(
@@ -690,14 +691,14 @@ def stream_drift(
                     "unknown_group" if cnt else "empty_batch",
                 ))
         if not windowed:
-            spark.createDataFrame(out, ddl).write.mode("overwrite").parquet(
+            local_frame(spark, out, ddl).write.mode("overwrite").parquet(
                 f"{sink}/epoch={int(epoch_id)}"
             )
         elif out:
             # ONE write for all finalized windows of the batch: dynamic
             # partition overwrite replaces exactly the written windows'
             # partitions (a crash-replay rewrites identical content)
-            df = spark.createDataFrame(out, ddl)
+            df = local_frame(spark, out, ddl)
             df.select(
                 F.timestamp_seconds("ws").alias("window_start"),
                 F.timestamp_seconds("we").alias("window_end"),

@@ -69,6 +69,7 @@ from ..drift.embedding import (
     _dist_to_vec_col,
     _np_dist,
 )
+from ..session import local_frame
 from .cells import cells, epoch_rows, group_of, keyed, run_stream, with_cells
 
 EMBEDDING_METRICS_SCHEMA = (
@@ -301,7 +302,8 @@ def stream_embedding_drift(
     known = cells(profile)
     if keys:
         # the per-group centroids, built once per stream and broadcast
-        cframe = F.broadcast(spark.createDataFrame(
+        cframe = F.broadcast(local_frame(
+            spark,
             [(*g, p["centroid"]) for g, p in known.items()],
             ", ".join(f"{k} string" for k in keys) + ", __cent array<double>",
         ))

@@ -63,6 +63,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..config import LEXICAL_THRESHOLD, MIN_SAMPLES
 from ..drift.semantic import PERPLEXITY_THRESHOLD, TOPIC_THRESHOLD, assign_topics
+from ..session import local_frame
 from .cells import cells, epoch_rows, group_of, join_on, keyed, run_stream, with_cells
 
 TEXT_METRICS_SCHEMA = (
@@ -146,7 +147,7 @@ def _lm_frame(spark: SparkSession, keys: list[str], vocabs: dict) -> DataFrame:
     ddl = ", ".join(f"{k} string" for k in keys) + (
         (", " if keys else "") + "token string, cr bigint, __rt double"
     )
-    return spark.createDataFrame(rows, ddl)
+    return local_frame(spark, rows, ddl)
 
 
 def _denom(vocab: dict) -> float:

@@ -30,6 +30,7 @@ from __future__ import annotations
 import numpy as np
 
 from .. import codecs
+from ..session import local_frame
 
 IMAGES_DDL = "item_id string, media binary, media_type string"
 
@@ -78,4 +79,4 @@ def image_rows(n: int = 100) -> list[tuple]:
 
 def images_frame(spark, n: int = 100):
     """The image tier as a DataFrame."""
-    return spark.createDataFrame(image_rows(n), IMAGES_DDL)
+    return local_frame(spark, image_rows(n), IMAGES_DDL)

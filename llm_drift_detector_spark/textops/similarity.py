@@ -23,6 +23,8 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from ..session import local_frame
+
 
 # Vector math via array higher-order functions (zip_with/aggregate):
 # a d-term sum of element_at expressions generates O(d) Java code per
@@ -299,7 +301,7 @@ def ivf_build_index(
     spark = df.sparkSession
     centroids = kmeans_fit(df, col, k=n_clusters, iters=iters, seed=seed)
     cent_rows = [(int(j), [float(v) for v in c]) for j, c in enumerate(centroids)]
-    spark.createDataFrame(cent_rows, "j int, c array<double>").coalesce(
+    local_frame(spark, cent_rows, "j int, c array<double>").coalesce(
         1
     ).write.mode("overwrite").parquet(f"{index_dir}/centroids")
     (

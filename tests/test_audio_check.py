@@ -181,28 +181,34 @@ def test_wav_native_tier_edge_layouts(spark):
     assert deep_pairs.count(("dur_ms_mismatch", "trunc")) == 1
 
 
+def _leaves(df) -> list:
+    plan = df._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    return [leaves.apply(i) for i in range(leaves.size())]
+
+
+def _columns(leaf) -> list[str]:
+    out = leaf.output()
+    return [out.apply(j).name() for j in range(out.size())]
+
+
 def _fetched_ids(df) -> set[str]:
     """The targeted SNR fetch's id set, read off the returned plan: the
-    rows of the broadcast id frame (a one-column ``clip_id`` leaf) or,
-    failing that, the literals of the ``clip_id IN``/``INSET`` filter."""
+    rows of the broadcast id frame (a one-column ``clip_id`` local
+    relation) or, failing that, the literals of the ``clip_id
+    IN``/``INSET`` filter."""
     import re
 
     from pyspark.sql import DataFrame
 
     spark = df.sparkSession
-    plan = df._jdf.queryExecution().optimizedPlan()
-    leaves = plan.collectLeaves()
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        out = leaf.output()
-        if leaf.nodeName() == "LogicalRDD" and [
-            out.apply(j).name() for j in range(out.size())
-        ] == ["clip_id"]:
+    for leaf in _leaves(df):
+        if leaf.nodeName() == "LocalRelation" and _columns(leaf) == ["clip_id"]:
             jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
                 spark._jsparkSession, leaf
             )
             return {r.clip_id for r in DataFrame(jdf, spark).collect()}
-    text = plan.toString()
+    text = df._jdf.queryExecution().optimizedPlan().toString()
     m = re.search(r"clip_id#\d+ INSET ([^,()\s]+(?:, [^,()\s]+)*)", text)
     if m:
         return set(m.group(1).split(", "))
@@ -221,3 +227,16 @@ def test_snr_fetch_targets_exactly_the_payload_differing_ids(synth, shape):
     differing = exp["dur_ms_mismatch"] | exp["snr_allclose"]
     df = audio_invariant_violations(synth["clips"], synth["reference"], **shape)
     assert _fetched_ids(df) == differing
+
+
+@pytest.mark.parametrize("shape", [{}, {"max_fetch_ids": 0}], ids=["in_list", "id_frame"])
+def test_driver_verdicts_and_id_frame_are_local_relations(synth, shape):
+    """The frozen native verdicts (and, past the In-list cap, the id
+    frame) re-enter the plan as Arrow local relations: no leaf is a
+    pickled Python RDD, whose scan would start Python workers."""
+    df = audio_invariant_violations(synth["clips"], synth["reference"], **shape)
+    leaves = _leaves(df)
+    assert "LogicalRDD" not in {leaf.nodeName() for leaf in leaves}
+    local = [_columns(leaf) for leaf in leaves if leaf.nodeName() == "LocalRelation"]
+    assert ["clip_id", "check_name", "detail"] in local
+    assert (["clip_id"] in local) == ("max_fetch_ids" in shape)

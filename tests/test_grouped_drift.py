@@ -105,6 +105,22 @@ def test_grouped_binned_is_fully_native(tagged):
         assert bad not in plan, f"{bad} found in native-only plan"
 
 
+def test_grouped_binned_driver_path_is_a_local_relation(spark, tagged):
+    """Bounded grids fold on the driver: the result is an Arrow local
+    relation, so collecting it runs no Spark job."""
+    out = grouped_distribution_drift_binned(tagged, ["grp"], "v")
+    plan = out._jdf.queryExecution().analyzed()
+    assert plan.nodeName() == "LocalRelation"
+    sc = spark.sparkContext
+    sc.setJobGroup("grouped_binned_collect", "collect of the driver path")
+    try:
+        assert len(out.collect()) == len(GROUPS)
+        jobs = sc.statusTracker().getJobIdsForGroup("grouped_binned_collect")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []
+
+
 def test_tag_windows_roundtrip(spark):
     ra, rb = _pair_frames(spark, "a")
     t = tag_windows(ra, rb)

@@ -5,6 +5,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from llm_drift_detector_spark.pipeline import RunConfig, run_validation
+from llm_drift_detector_spark.pipeline.runner import CHECK_VERSIONS
 from llm_drift_detector_spark.synth import ensure_synth
 from llm_drift_detector_spark.synth.clips import SF_ROWS, SynthParams, expected_violations
 
@@ -471,3 +472,114 @@ def test_merge_upsert_survives_empty_target_dir(spark, tmp_path):
     # and the normal idempotency still holds on rerun
     merge_upsert(spark, df, str(path), ["k"])
     assert spark.read.parquet(str(path)).count() == 2
+
+
+def _checkpoint_totals(spark, cfg) -> dict:
+    """The summary's totals as one aggregate over the run's checkpoint
+    table."""
+    status = F.col("status")
+    return (
+        spark.read.parquet(f"{cfg.out_dir}/checkpoints")
+        .where(F.col("run_id") == cfg.run_id)
+        .agg(
+            F.count(F.when(status == "pass", 1)).alias("buckets_pass"),
+            F.count(F.when(status == "fail", 1)).alias("buckets_fail"),
+            F.coalesce(F.sum("rows_processed"), F.lit(0)).alias("rows_processed"),
+            F.coalesce(F.sum("violations_emitted"), F.lit(0)).alias("violations_emitted"),
+        )
+        .collect()[0]
+        .asDict()
+    )
+
+
+def _totals(summary: dict) -> dict:
+    return {k: summary[k] for k in ("buckets_pass", "buckets_fail", "rows_processed", "violations_emitted")}
+
+
+def test_checkpoint_counts_match_committed_violations(spark, tables, tmp_path):
+    """Each checkpoint's violations_emitted/status equals a count over
+    its group's committed violation files (buckets without violations
+    included); the summary's totals equal the checkpoint table's, on a
+    fresh run and on a rerun of the completed run."""
+    cfg = RunConfig(run_id="cpc", out_dir=str(tmp_path / "cpc"))
+    args = (tables["clips"], tables["transcripts"], tables["reference"])
+    s1 = run_validation(spark, *args, cfg)
+    assert _totals(s1) == _checkpoint_totals(spark, cfg)
+
+    written = {
+        r.partition_id: r["count"]
+        for r in spark.read.parquet(f"{cfg.out_dir}/violations")
+        .where(F.col("run_id") == cfg.run_id)
+        .groupBy("partition_id")
+        .count()
+        .collect()
+    }
+    assert 0 < len(written) < cfg.n_buckets  # both kinds of bucket present
+    cps = spark.read.parquet(f"{cfg.out_dir}/checkpoints").collect()
+    assert sorted(r.partition_id for r in cps) == list(range(cfg.n_buckets))
+    for r in cps:
+        n = written.get(r.partition_id, 0)
+        assert r.violations_emitted == n, r.partition_id
+        assert r.status == ("fail" if n else "pass"), r.partition_id
+
+    s2 = run_validation(spark, *args, cfg)
+    assert s2["executed_groups"] == []
+    assert _totals(s2) == _checkpoint_totals(spark, cfg) == _totals(s1)
+
+
+def test_partial_run_and_resume_summaries_match_checkpoints(spark, tables, tmp_path):
+    cfg = RunConfig(run_id="pcs", out_dir=str(tmp_path / "pcs"))
+    args = (tables["clips"], tables["transcripts"], tables["reference"])
+    s1 = run_validation(spark, *args, cfg, max_groups=2)
+    assert _totals(s1) == _checkpoint_totals(spark, cfg)
+    assert s1["buckets_pass"] + s1["buckets_fail"] < cfg.n_buckets
+    s2 = run_validation(spark, *args, cfg)
+    assert _totals(s2) == _checkpoint_totals(spark, cfg)
+    assert s2["buckets_pass"] + s2["buckets_fail"] == cfg.n_buckets
+
+
+def test_run_with_every_check_disabled_still_checkpoints(spark, tables, tmp_path):
+    """No active check: each group writes an empty frame, and every
+    bucket still checkpoints as a pass with zero violations."""
+    cfg = RunConfig(
+        run_id="none", out_dir=str(tmp_path / "none"),
+        disabled_checks=tuple(CHECK_VERSIONS),
+    )
+    s = run_validation(
+        spark, tables["clips"], tables["transcripts"], tables["reference"], cfg
+    )
+    assert len(s["executed_groups"]) == cfg.groups
+    assert s["buckets_pass"] == cfg.n_buckets and s["buckets_fail"] == 0
+    assert s["violations_emitted"] == 0
+    assert s["rows_processed"] == SF_ROWS["sf0.001"]
+    assert _totals(s) == _checkpoint_totals(spark, cfg)
+
+
+def test_failed_group_writes_no_metrics(spark, tables, tmp_path, monkeypatch):
+    """A run whose group raises stops before the global metrics: no
+    metrics/ directory is left behind."""
+    import os
+    import threading
+
+    import llm_drift_detector_spark.pipeline.runner as runner_mod
+
+    real = runner_mod._violations_for_group
+    calls = []
+    lock = threading.Lock()
+
+    def third_call_fails(*a, **k):
+        with lock:
+            calls.append(None)
+            n = len(calls)
+        if n == 3:
+            raise RuntimeError("group 2 failed")
+        return real(*a, **k)
+
+    cfg = RunConfig(run_id="failed_nm", out_dir=str(tmp_path / "fnm"))
+    monkeypatch.setattr(runner_mod, "_violations_for_group", third_call_fails)
+    with pytest.raises(RuntimeError, match="group 2 failed"):
+        run_validation(
+            spark, tables["clips"], tables["transcripts"], tables["reference"], cfg
+        )
+    assert os.path.exists(f"{cfg.out_dir}/checkpoints")
+    assert not os.path.exists(f"{cfg.out_dir}/metrics")
